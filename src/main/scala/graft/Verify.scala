@@ -41,23 +41,20 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // External-reader proof: when the phrase search was dumped, record
-    // the stored index's on-disk location so the DuckDB side can
-    // reproduce q_c103 FROM THE ARTIFACT FILES ALONE (no corpus view) —
-    // the engine-neutrality claim for the stored-index family. Serving
-    // from the StoredArtifact cache here costs no rebuild: q_c103's dump
-    // above already built it for this (dir, snapshot) key.
+    // External-reader proof: for each dumped artifact consumer, record
+    // the stored artifact's on-disk location so the DuckDB side can
+    // reproduce the query FROM THE ARTIFACT FILES ALONE (no corpus view) —
+    // the engine-neutrality claim for the stored-index families. Serving
+    // from the StoredArtifact cache here costs no rebuild: the query's
+    // dump above already built it for this (dir, snapshot) key.
     // a query may contribute SEVERAL keys (a segments dir + its
     // compacted dir) — each key carries ONE path, never a delimited
     // pack (ADVICE round 16: the old space-joined bm25_segments value
     // broke silently for any artifact root containing a space)
-    val idxEntries = Seq[(String, Seq[(String, () => String)])](
-      "q_c103_phrase_search" -> Seq("phrase_index" ->
-        (() => graft.operators.TextQueries.phraseIndex(spark, sfDir))),
-      "q_c45_bm25_stored" -> Seq("bm25_index" ->
-        (() => graft.operators.TextQueries.postingsIndex(spark, sfDir))),
-      "q_c66_minhash_stored" -> Seq("minhash_index" ->
-        (() => graft.operators.DedupQueries.minhashIndex(spark, sfDir))),
+    import graft.operators.StoredIndex
+    val families = StoredIndex.families
+    def gc(f: StoredIndex.Family) = () => StoredIndex.gc(spark, f, sfDir)
+    val idxEntries = (Seq[(String, Seq[(String, () => String)])](
       "q_c138_classifier_scores" -> Seq("cls_model" ->
         (() => graft.operators.QualityClassifierTrainer.modelArtifact(spark, sfDir))),
       "q_c143_model_drift" -> Seq("cls_model_drift" ->
@@ -67,50 +64,23 @@ object Verify {
           (() => graft.operators.QualityClassifierTrainer.modelArtifact(spark, sfDir)),
         "cls_model_post" ->
           (() => graft.operators.QualityClassifierTrainer.retrainedArtifact(spark, sfDir))),
-      "q_c131_ivf_stage1" -> Seq("ivf_index" ->
-        (() => graft.operators.SimilarityQueries.int8CompactedIndex(
-          spark, graft.operators.SimilarityQueries.int8SegmentsIndex(spark, sfDir)))),
-      "q_c141_retirement_gc" -> Seq("bm25_gc" ->
-        (() => graft.operators.TextQueries.bm25GcIndex(spark, sfDir))),
-      "q_c144_minhash_gc" -> Seq("minhash_gc" ->
-        (() => graft.operators.DedupQueries.minhashGcIndex(spark, sfDir))),
-      "q_c145_ivf_gc" -> Seq("ivf_gc" ->
-        (() => graft.operators.SimilarityQueries.int8GcIndex(spark, sfDir))),
-      "q_c146_phrase_gc" -> Seq("phrase_gc" ->
-        (() => graft.operators.TextQueries.phraseGcIndex(spark, sfDir))),
       // q_c148 re-emits the four GC keys so the audit replay works on a
       // subset run too; duplicate keys carry identical session-cached
       // paths (JSON last-wins)
-      "q_c148_gc_audit" -> Seq(
-        "bm25_gc" -> (() => graft.operators.TextQueries.bm25GcIndex(spark, sfDir)),
-        "minhash_gc" -> (() => graft.operators.DedupQueries.minhashGcIndex(spark, sfDir)),
-        "ivf_gc" -> (() => graft.operators.SimilarityQueries.int8GcIndex(spark, sfDir)),
-        "phrase_gc" -> (() => graft.operators.TextQueries.phraseGcIndex(spark, sfDir))),
-      "q_c133_segment_retirement" -> {
-        lazy val seg = graft.operators.TextQueries.bm25SegmentsIndex(spark, sfDir)
-        Seq("bm25_segments" -> (() => seg),
-          "bm25_compacted" ->
-            (() => graft.operators.TextQueries.bm25CompactedIndex(spark, seg)))
-      },
-      "q_c134_minhash_retirement" -> {
-        lazy val seg = graft.operators.DedupQueries.minhashSegmentsIndex(spark, sfDir)
-        Seq("minhash_segments" -> (() => seg),
-          "minhash_compacted" ->
-            (() => graft.operators.DedupQueries.minhashCompactedIndex(spark, seg)))
-      },
-      "q_c135_ivf_retirement" -> {
-        lazy val seg = graft.operators.SimilarityQueries.int8SegmentsIndex(spark, sfDir)
-        Seq("ivf_segments" -> (() => seg),
-          "ivf_compacted" ->
-            (() => graft.operators.SimilarityQueries.int8CompactedIndex(spark, seg)))
-      },
-      "q_c136_phrase_retirement" -> {
-        lazy val seg = graft.operators.TextQueries.phraseSegmentsIndex(spark, sfDir)
-        Seq("phrase_segments" -> (() => seg),
-          "phrase_compacted" ->
-            (() => graft.operators.TextQueries.phraseCompactedIndex(spark, seg)))
-      }
-    ).collect {
+      "q_c148_gc_audit" -> families.map(f => s"${f.name}_gc" -> gc(f))
+    ) ++ families.flatMap { f =>
+      val (search, verdict, gcQuery) = f.queries
+      lazy val seg = StoredIndex.segments(spark, f, sfDir)
+      val compacted = () => StoredIndex.compacted(spark, f, seg)
+      // the search serves the full build, or the compacted segments for
+      // a family without one (int8-IVF)
+      Seq(
+        search -> Seq(s"${f.name}_index" ->
+          (if (f.hasFull) () => StoredIndex.full(spark, f, sfDir) else compacted)),
+        verdict -> Seq(s"${f.name}_segments" -> (() => seg),
+          s"${f.name}_compacted" -> compacted),
+        gcQuery -> Seq(s"${f.name}_gc" -> gc(f)))
+    }).collect {
       // both conditions: the query must have been SELECTED this run (a
       // subset re-run into a reused outDir must not rebuild indexes it
       // never asked for, nor pair fresh index paths with stale dumps)

@@ -74,43 +74,60 @@ object PolyHash {
 
   val P: Long = 1000000007L
 
-  /** The fold over code points. ASCII fast path: when every byte is a
-    * single-byte sequence (numBytes == numChars) the bytes ARE the code
-    * points; otherwise decode code points exactly as `split(s, '')` +
-    * `ascii` would (both operate on code points).
+  /** The fold over what `split(s, '')` + `ascii` yield: `split` cuts
+    * the bytes at UTF-8 lead-byte lengths (the last piece takes the rest)
+    * and `ascii` decodes a piece's first code point. While every byte is
+    * < 0x80 the bytes ARE those code points; the first high byte hands
+    * the fold, at the same index, to [[foldPieces]] — one pass.
     */
   def compute(s: UTF8String): Long = {
     val nb = s.numBytes
-    if (nb == s.numChars) {
-      var acc = 0L
-      var i = 0
-      while (i < nb) {
-        acc = (acc * 31L + s.getByte(i)) % P
-        i += 1
-      }
-      acc
-    } else {
+    var acc = 0L
+    var i = 0
+    while (i < nb) {
+      val b = s.getByte(i)
+      if (b < 0) return foldPieces(s, i, acc)
+      acc = (acc * 31L + b) % P
+      i += 1
+    }
+    acc
+  }
+
+  /** [[compute]]'s fold continued from byte `from`. Valid UTF-8 pieces
+    * are whole code points, so a valid string folds its decoded code
+    * points; malformed UTF-8 decodes piece by piece, so a lead byte
+    * followed by a non-continuation byte yields ONE replacement code
+    * point for the pair, as `ascii` of that piece does.
+    */
+  private def foldPieces(s: UTF8String, from: Int, acc0: Long): Long = {
+    var acc = acc0
+    var i = from
+    if (s.isValid) {
       val str = s.toString
-      var acc = 0L
-      var i = 0
-      val n = str.length
-      while (i < n) {
+      while (i < str.length) {
         val cp = str.codePointAt(i)
         acc = (acc * 31L + cp) % P
         i += Character.charCount(cp)
       }
-      acc
+    } else {
+      val bytes = s.getBytes
+      while (i < bytes.length) {
+        val len = math.min(UTF8String.numBytesForFirstByte(bytes(i)), bytes.length - i)
+        val cp = new String(bytes, i, len, java.nio.charset.StandardCharsets.UTF_8)
+          .codePointAt(0)
+        acc = (acc * 31L + cp) % P
+        i += len
+      }
     }
+    acc
   }
 
-  /** 31^codepoints(s) mod p — the composition weight of appending `s`. */
+  /** 31^pieces(s) mod p — the composition weight of appending `s`:
+    * `numChars` counts exactly the `split(s, '')` pieces [[compute]]
+    * folds, malformed UTF-8 included.
+    */
   def pow31(s: UTF8String): Long = {
-    val n =
-      if (s.numBytes == s.numChars) s.numBytes
-      else {
-        val str = s.toString
-        str.codePointCount(0, str.length)
-      }
+    val n = s.numChars
     var r = 1L
     var b = 31L
     var e = n
@@ -225,15 +242,19 @@ object GramHashes {
 }
 
 /** `sliding_min(hs, w)` — see [[PolyHash]] header. Input must be an
-  * ARRAY<BIGINT> with no NULL elements (gram_hashes output); `w` must be
-  * a foldable positive integer.
+  * ARRAY<BIGINT> whose type rules out NULL elements (containsNull =
+  * false, as gram_hashes output declares); `w` must be a foldable
+  * positive integer. An empty input yields [].
   */
 case class SlidingMin(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), IntegerType) =>
+      case (ArrayType(LongType, true), IntegerType) =>
+        TypeCheckResult.TypeCheckFailure(
+          "sliding_min: input array may hold NULL elements (containsNull = true)")
+      case (ArrayType(LongType, false), IntegerType) =>
         if (!right.foldable)
           TypeCheckResult.TypeCheckFailure("sliding_min: w must be foldable")
         else TypeCheckResult.TypeCheckSuccess

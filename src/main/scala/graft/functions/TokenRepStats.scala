@@ -76,6 +76,10 @@ object TokenRepStats {
     var ci = 0
     while (ci < len) { if (str.charAt(ci) == ' ') sp += 1; ci += 1 }
     nTok = sp + 1
+    // the bigram table below sizes to a power of two ≤ 8·(nTok − 1) slots:
+    // up to 2^28 tokens that stays ≤ 2^30, a valid Int array size
+    require(nTok <= (1 << 28),
+      s"token_rep_stats: a document of $nTok tokens exceeds the 2^28-token limit")
     // per-doc dense token ids via exact string map
     val ids = new Array[Int](nTok)
     val idOf = new java.util.HashMap[String, Integer](nTok * 2)

@@ -263,13 +263,13 @@ object DedupQueries {
     * → 6 permutations → 3 bands of 2 rows → docs sharing any band key.
     */
   def minhashCandidates(s: SparkSession, d: String): DataFrame =
-    candidatesFromSigs(minhashSignatures(s, d))
+    candidatesFromSigs(minhashSignatures(Tables(s, d, "documents")))
 
   /** The per-doc 6-permutation signature frame (doc_id, mh0..mh5) — the
     * artifact worth STORING: 48 bytes/doc computed once at ingest, vs
     * re-shingling the raw text on every dedup run (see q_c66).
     */
-  private[graft] def minhashSignatures(s: SparkSession, d: String): DataFrame = {
+  private[graft] def minhashSignatures(docs: DataFrame): DataFrame = {
     // gram_hashes instead of the shingles() string pipeline: the only
     // consumers here are MIN aggregates over permuted hashes, and min is
     // invariant to duplicates, so the array_distinct + shingle-string
@@ -277,8 +277,8 @@ object DedupQueries {
     // is hashed ONCE via composition — optimization r19, guide §1.2).
     // Values are provably identical to hashing the distinct shingle set;
     // the DuckDB oracle and the SQL twin keep the string form.
-    hashFns(s)
-    val h = Tables(s, d, "documents")
+    hashFns(docs.sparkSession)
+    val h = docs
       .select(col("doc_id"), split(lower(col("text")), " ").as("ts"))
       .filter(size(col("ts")) >= 3)
       .select(col("doc_id"), explode(expr("gram_hashes(ts, 3)")).as("th"))
@@ -313,32 +313,19 @@ object DedupQueries {
       .distinct()
   }
 
-  /** Write the stored MinHash signature index: one row per doc, six
+  /** The MinHash family's slice recipe ([[StoredIndex.MinHash]]): the
+    * stored signature index over a documents frame (the whole corpus for
+    * q_c66, one segment's slice otherwise) — one row per doc, six
     * BIGINT minhashes, range-partitioned and sorted by doc_id (doc-keyed
-    * point lookups and merge joins prune on parquet min/max). The third
-    * stored index after int8-IVF and BM25 postings — at ingest scale the
-    * signature column is ~48 B/doc vs re-reading and re-shingling the
-    * full text (the dominant dedup cost) on every run.
+    * point lookups and merge joins prune on parquet min/max). At ingest
+    * scale the signature column is ~48 B/doc vs re-reading and
+    * re-shingling the full text (the dominant dedup cost) on every run.
     */
-  private[graft] def buildMinhashIndex(
-      s: SparkSession, d: String, path: String): Unit =
-    minhashSignatures(s, d)
+  private[graft] def buildMinhashIndex(docs: DataFrame, path: String): Unit =
+    minhashSignatures(docs)
       .repartitionByRange(col("doc_id"))
       .sortWithinPartitions(col("doc_id"))
       .write.mode("overwrite").parquet(s"$path/sigs")
-
-  /** Session-stable index location — the shared
-    * [[graft.core.StoredArtifact]] lifecycle (content-snapshot guard,
-    * per-key build latch, deferred deletion of abandoned snapshots).
-    */
-  private val minhashIdxBuilt =
-    new graft.core.StoredArtifact("graft-minhash-index")
-
-  private[graft] def minhashIndex(s: SparkSession, d: String): String =
-    minhashIdxBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))) {
-      path => buildMinhashIndex(s, d, path)
-    }
 
   /** Candidate pairs served from the STORED signatures: the corpus text
     * is never read — the scan is the 48 B/doc signature table.
@@ -925,7 +912,8 @@ object DedupQueries {
       Some(s"""WITH $duckMinhashCand
               |SELECT doc_a, doc_b FROM cand ORDER BY doc_a, doc_b""".stripMargin)
     ) { (s, d) =>
-      minhashSearchStored(s, minhashIndex(s, d)).orderBy(col("doc_a"), col("doc_b"))
+      minhashSearchStored(s, StoredIndex.full(s, StoredIndex.MinHash, d))
+        .orderBy(col("doc_a"), col("doc_b"))
     },
 
     // ---- q_c68: incremental signature-index append ------------------------
@@ -943,8 +931,9 @@ object DedupQueries {
       Some(s"""WITH $duckMinhashCand
               |SELECT doc_a, doc_b FROM cand ORDER BY doc_a, doc_b""".stripMargin)
     ) { (s, d) =>
-      val baseSigs = s.read.parquet(s"${minhashBaseIndex(s, d)}/sigs")
-      val batchSigs = minhashSignatures(s, d)
+      val baseSigs = s.read.parquet(
+        s"${StoredIndex.segments(s, StoredIndex.MinHash, d)}/seg0/sigs")
+      val batchSigs = minhashSignatures(Tables(s, d, "documents"))
         .filter(col("doc_id") % 10 === 3)
       candidatesFromSigs(baseSigs.unionByName(batchSigs))
         .orderBy(col("doc_a"), col("doc_b"))
@@ -968,7 +957,8 @@ object DedupQueries {
       Some(s"""WITH $duckMinhashCand
               |SELECT doc_a, doc_b FROM cand ORDER BY doc_a, doc_b""".stripMargin)
     ) { (s, d) =>
-      minhashSearchStored(s, minhashCompactedIndex(s, minhashSegmentsIndex(s, d)))
+      minhashSearchStored(s, StoredIndex.compacted(s, StoredIndex.MinHash,
+        StoredIndex.segments(s, StoredIndex.MinHash, d)))
         .orderBy(col("doc_a"), col("doc_b"))
     },
 
@@ -1229,7 +1219,7 @@ object DedupQueries {
               |FROM eq GROUP BY 1 ORDER BY jac_decile""".stripMargin)
     ) { (s, d) =>
       val jp = verifiedJaccardPairs(s, d)
-      val sig = minhashSignatures(s, d)
+      val sig = minhashSignatures(Tables(s, d, "documents"))
       val sa = sig.select(
         col("doc_id").as("doc_a") +: (0 until 6).map(i => col(s"mh$i").as(s"a$i")): _*)
       val sb = sig.select(
@@ -1423,7 +1413,7 @@ object DedupQueries {
               |$duckJaccardTail,
               |$lshGridSqlTail""".stripMargin)
     ) { (s, d) =>
-      val sig = s.read.parquet(s"${minhashIndex(s, d)}/sigs")
+      val sig = s.read.parquet(s"${StoredIndex.full(s, StoredIndex.MinHash, d)}/sigs")
       val sFrame = verifiedJaccardPairs(s, d)
         .select(col("doc_a"), col("doc_b"),
           (col("shared").cast("double") / col("uni").cast("double")).as("s"))
@@ -1472,12 +1462,7 @@ object DedupQueries {
     // stored artifacts ⇒ rows-only; the family law itself is
     // spec-pinned in RetirementPropertySpec/Bm25RetirementSpec.
     QueryDef("q_c134_minhash_retirement", None) { (s, d) =>
-      val segPath = minhashSegmentsIndex(s, d)
-      val cPath = minhashCompactedIndex(s, segPath)
-      TextQueries.segmentRetirementPlan(
-        Seq("seg0" -> s.read.parquet(s"$segPath/seg0/sigs"),
-          "seg1" -> s.read.parquet(s"$segPath/seg1/sigs")),
-        s.read.parquet(s"$cPath/sigs"))
+      StoredIndex.verdict(s, StoredIndex.MinHash, d).drop("tbl")
     },
 
     // ---- q_c144: MinHash-signature retirement GC -----------------------------
@@ -1486,7 +1471,7 @@ object DedupQueries {
     // the certified segment directories (atomically gated), journal to
     // gc_log. Frame = the q_c66 banded candidate search served from the
     // post-GC compacted signature table + the GC outcome
-    // ([[TextQueries.gcServe]]). Rows-only (stored artifacts only);
+    // ([[StoredIndex.gcServe]]). Rows-only (stored artifacts only);
     // RetirementGcSpec proves post-GC candidates ≡ the pre-GC
     // segment-union candidates with the corpus deleted first; DuckDB
     // reproduces the frame from the GC'd artifact alone
@@ -1496,8 +1481,8 @@ object DedupQueries {
     // into additive 1-row state; the candidate search shuffles 48 B/doc
     // signatures on band keys, never the corpus.
     QueryDef("q_c144_minhash_gc", None) { (s, d) =>
-      val path = minhashGcIndex(s, d)
-      TextQueries.gcServe(s, path,
+      val path = StoredIndex.gc(s, StoredIndex.MinHash, d)
+      StoredIndex.gcServe(s, path,
         minhashSearchStored(s, s"$path/compacted"))
         .orderBy(col("doc_a"), col("doc_b"))
     }
@@ -1679,85 +1664,4 @@ object DedupQueries {
       .select(col("doc_id"),
         explode(array_distinct(expr(s"sliding_min(hs, $winW)"))).as("fp"))
   }
-
-  /** The BASE-corpus (doc_id % 10 <> 3) signature index for q_c68's
-    * append scenario — same lifecycle as [[minhashIndex]], cached under
-    * its own key.
-    */
-  private val minhashBaseBuilt =
-    new graft.core.StoredArtifact("graft-minhash-base")
-
-  private[graft] def minhashBaseIndex(s: SparkSession, d: String): String =
-    minhashBaseBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))) { path =>
-      minhashSignatures(s, d)
-        .filter(col("doc_id") % 10 =!= 3)
-        .repartitionByRange(col("doc_id"))
-        .sortWithinPartitions(col("doc_id"))
-        .write.mode("overwrite").parquet(s"$path/sigs")
-    }
-
-  /** q_c129's SEGMENTED signature index — base and batch signatures
-    * each persisted as their own doc_id-sorted segment (the bm25/phrase
-    * segments pattern).
-    */
-  private val minhashSegmentsBuilt =
-    new graft.core.StoredArtifact("graft-minhash-segments")
-
-  private[graft] def minhashSegmentsIndex(s: SparkSession, d: String): String =
-    minhashSegmentsBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))) { path =>
-      val sigs = minhashSignatures(s, d)
-      Seq(("seg0", col("doc_id") % 10 =!= 3), ("seg1", col("doc_id") % 10 === 3))
-        .foreach { case (seg, pred) =>
-          sigs.filter(pred)
-            .repartitionByRange(col("doc_id"))
-            .sortWithinPartitions(col("doc_id"))
-            .write.mode("overwrite").parquet(s"$path/$seg/sigs")
-        }
-    }
-
-  /** The COMPACTED signature artifact: segment tables merged into one
-    * doc_id-range-sorted table. Keyed on the segment directory's
-    * snapshot — compaction is a function of the stored segments alone.
-    */
-  private val minhashCompactedBuilt =
-    new graft.core.StoredArtifact("graft-minhash-compacted")
-
-  private[graft] def minhashCompactedIndex(s: SparkSession, segPath: String): String =
-    minhashCompactedBuilt.getOrBuild(
-      segPath, graft.core.SessionMemo.snapshot(s, Seq(segPath))) { path =>
-      s.read.parquet(s"$segPath/seg0/sigs", s"$segPath/seg1/sigs")
-        .repartitionByRange(col("doc_id"))
-        .sortWithinPartitions(col("doc_id"))
-        .write.mode("overwrite").parquet(s"$path/sigs")
-    }
-
-  /** q_c144's GC'd MinHash artifact — signature segments built,
-    * compacted, the q_c134 verdict recomputed, retired segment
-    * directories DELETED (atomically gated), journal written; its OWN
-    * artifact copy (GC is destructive by design — it never acts on
-    * q_c134's shared segments store).
-    */
-  private val minhashGcBuilt = new graft.core.StoredArtifact("graft-minhash-gc")
-
-  private[graft] def minhashGcIndex(s: SparkSession, d: String): String =
-    minhashGcBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))) { path =>
-      val sigs = minhashSignatures(s, d)
-      Seq(("seg0", col("doc_id") % 10 =!= 3), ("seg1", col("doc_id") % 10 === 3))
-        .foreach { case (seg, pred) =>
-          sigs.filter(pred)
-            .repartitionByRange(col("doc_id"))
-            .sortWithinPartitions(col("doc_id"))
-            .write.mode("overwrite").parquet(s"$path/segments/$seg/sigs")
-        }
-      s.read.parquet(s"$path/segments/seg0/sigs", s"$path/segments/seg1/sigs")
-        .repartitionByRange(col("doc_id"))
-        .sortWithinPartitions(col("doc_id"))
-        .write.mode("overwrite").parquet(s"$path/compacted/sigs")
-      TextQueries.writeGcLog(s, TextQueries.retirementGc(s,
-        Seq("seg0" -> s"$path/segments/seg0", "seg1" -> s"$path/segments/seg1"),
-        s"$path/compacted", Seq("sigs" -> None)), path)
-    }
 }

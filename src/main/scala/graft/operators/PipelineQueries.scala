@@ -2876,7 +2876,7 @@ object PipelineQueries {
     * q_c13, q_c19, q_c64 and q_c67 all consume the SAME fixpoint, and
     * the star-CC iteration is by far its expensive part — one build per
     * corpus snapshot. Served as session-local PARQUET (the stored-index
-    * discipline of postingsIndex/minhashIndex) rather than through the
+    * discipline of [[StoredIndex]]) rather than through the
     * block-level SessionMemo deliberately: the CC output's lineage ends
     * in localCheckpoint leaves that `CachedRdds.drain()` releases
     * between queries, so a persisted-block serve could face an
@@ -3216,7 +3216,7 @@ object PipelineQueries {
     graft.core.SessionMemo.getOrBuild(
       s, "decontam_report", d, Seq(s"$d/documents.parquet"))(decontamReportBuild(s, d))
 
-  private def decontamReportBuild(s: SparkSession, d: String): DataFrame = {
+  private[graft] def decontamReportBuild(s: SparkSession, d: String): DataFrame = {
     val n = 13
     val toks = Tables(s, d, "documents")
       .select(col("doc_id"), split(lower(col("text")), " ").as("ts"))
@@ -3417,7 +3417,7 @@ object PipelineQueries {
   /** The md5 64-bit-half chunk columns over an in-scope `h` md5-hex
     * column — ONE copy of the chunk rule shared by [[manifestDigest]]
     * and the segment-retirement digests
-    * ([[TextQueries.segmentRetirementPlan]]), so the additive-digest
+    * ([[StoredIndex.segmentRetirementPlan]]), so the additive-digest
     * arithmetic cannot fork across artifact families.
     */
   private[graft] def md5ChunkA: org.apache.spark.sql.Column =

@@ -34,7 +34,7 @@ object SimilarityQueries {
   private def embDoubleRaw(s: SparkSession, d: String): DataFrame =
     embDoubleOf(Tables.raw(s, d, "embeddings"))
 
-  private def embDoubleOf(t: DataFrame): DataFrame =
+  private[graft] def embDoubleOf(t: DataFrame): DataFrame =
     t.select(
         col("vec_id"),
         col("label"),
@@ -367,7 +367,7 @@ object SimilarityQueries {
     // the base corpus floats are never re-read — stage 1 scans the stored
     // codes ∪ the batch's freshly-coded rows.
     QueryDef("q_c71_ivf_append", None) { (s, d) =>
-      val path = int8BaseIndex(s, d)
+      val path = StoredIndex.segments(s, StoredIndex.Ivf, d)
       val (fn, nprobe, _) = frozenQuantizer(s, path)
       graft.functions.CosineSimilarity.register(s)
       graft.functions.Int8Ops.register(s)
@@ -377,7 +377,7 @@ object SimilarityQueries {
         .withColumn("cell", expr(s"element_at($fn(v, 1), 1)"))
         .select(col("vec_id"), col("cell"), expr("pack_int8(v)").as("q8"))
       ivfSearchCodes(
-        s, s.read.parquet(s"$path/codes").unionByName(batchCodes), e, fn, nprobe)
+        s, s.read.parquet(s"$path/seg0/codes").unionByName(batchCodes), e, fn, nprobe)
     },
 
     // ---- q_c72: cell-assignment drift monitor (rebuild-on-threshold) ------
@@ -401,11 +401,11 @@ object SimilarityQueries {
     // q_c9 class); Int8AppendSpec pins the discriminating behavior
     // (in-distribution batch → no rebuild, shifted batch → rebuild).
     QueryDef("q_c72_ivf_drift", None) { (s, d) =>
-      val path = int8BaseIndex(s, d)
+      val path = StoredIndex.segments(s, StoredIndex.Ivf, d)
       val (fn, _, k) = frozenQuantizer(s, path)
       val batchCells = embDouble(s, d).filter(col("vec_id") % 10 === 3)
         .select(expr(s"element_at($fn(v, 1), 1)").as("cell"))
-      ivfDrift(s, s"$path/codes", batchCells, k)
+      ivfDrift(s, s"$path/seg0/codes", batchCells, k)
     },
 
     // ---- q_c93: per-source embedding-centroid drift matrix ----------------
@@ -631,7 +631,7 @@ object SimilarityQueries {
               |FROM f ORDER BY rrf DESC, id LIMIT 20""".stripMargin)
     ) { (s, d) =>
       graft.functions.CosineSimilarity.register(s)
-      val path = TextQueries.postingsIndex(s, d)
+      val path = StoredIndex.full(s, StoredIndex.Bm25, d)
       val wb = Window.orderBy(col("bm25").desc, col("doc_id"))
       val btop = TextQueries.bm25Scores(
           s.read.parquet(s"$path/postings"), s.read.parquet(s"$path/stats"),
@@ -677,7 +677,8 @@ object SimilarityQueries {
     // drift monitor decides WHEN to pay this merge.
     // Approximate search class (q_c9/q_c71) ⇒ rows-only driver check.
     QueryDef("q_c130_ivf_compacted", None) { (s, d) =>
-      val path = int8CompactedIndex(s, int8SegmentsIndex(s, d))
+      val path = StoredIndex.compacted(s, StoredIndex.Ivf,
+        StoredIndex.segments(s, StoredIndex.Ivf, d))
       val (fn, nprobe, _) = frozenQuantizer(s, path)
       graft.functions.CosineSimilarity.register(s)
       graft.functions.Int8Ops.register(s)
@@ -704,7 +705,8 @@ object SimilarityQueries {
     // model state, the q_c9 class) ⇒ rows-only driver check; the DuckDB
     // replay is the stronger gate.
     QueryDef("q_c131_ivf_stage1", None) { (s, d) =>
-      ivfStage1Sym(s, int8CompactedIndex(s, int8SegmentsIndex(s, d)))
+      ivfStage1Sym(s, StoredIndex.compacted(s, StoredIndex.Ivf,
+        StoredIndex.segments(s, StoredIndex.Ivf, d)))
     },
 
     // ---- q_c132: IVF nprobe frontier calibration ----------------------------
@@ -734,7 +736,7 @@ object SimilarityQueries {
     // ---- q_c135: int8-IVF segment retirement ----------------------------------
     // The q_c133 GC verdict for the int8 code family — the BINARY-column
     // artifact shape: packed q8 codes canonicalize through hex() inside
-    // [[TextQueries.segmentRetirementPlan]] (injective, engine-neutral —
+    // [[StoredIndex.segmentRetirementPlan]] (injective, engine-neutral —
     // concat_ws on raw bytes would collapse distinct codes onto UTF-8
     // replacement characters). The compacted codes table (q_c130)
     // retires seg0/seg1 iff digests and row counts conserve; DuckDB
@@ -743,12 +745,7 @@ object SimilarityQueries {
     // artifacts, never the corpus); byte-flip sensitivity is pinned in
     // RetirementPropertySpec's family sweep.
     QueryDef("q_c135_ivf_retirement", None) { (s, d) =>
-      val segPath = int8SegmentsIndex(s, d)
-      val cPath = int8CompactedIndex(s, segPath)
-      TextQueries.segmentRetirementPlan(
-        Seq("seg0" -> s.read.parquet(s"$segPath/seg0/codes"),
-          "seg1" -> s.read.parquet(s"$segPath/seg1/codes")),
-        s.read.parquet(s"$cPath/codes"))
+      StoredIndex.verdict(s, StoredIndex.Ivf, d).drop("tbl")
     },
 
     // ---- q_c145: int8-IVF retirement GC --------------------------------------
@@ -758,7 +755,7 @@ object SimilarityQueries {
     // BINARY codes, DELETE the certified segment directories
     // (atomically gated), journal to gc_log. Frame = the q_c131
     // symmetric-int8 stage-1 search served from the post-GC compacted
-    // artifact + the GC outcome ([[TextQueries.gcServe]]). Rows-only
+    // artifact + the GC outcome ([[StoredIndex.gcServe]]). Rows-only
     // (stored artifacts only); RetirementGcSpec proves post-GC search ≡
     // the pre-GC segment-union search with the embeddings copy deleted
     // first; DuckDB reproduces the frame from the GC'd artifact alone
@@ -768,8 +765,8 @@ object SimilarityQueries {
     // into additive 1-row state; stage-1 scans stored int8 codes at
     // 0.17× the float bytes, cell-routed.
     QueryDef("q_c145_ivf_gc", None) { (s, d) =>
-      val path = int8GcIndex(s, d)
-      TextQueries.gcServe(s, path, ivfStage1Sym(s, s"$path/compacted"))
+      val path = StoredIndex.gc(s, StoredIndex.Ivf, d)
+      StoredIndex.gcServe(s, path, ivfStage1Sym(s, s"$path/compacted"))
         .orderBy(col("query_id"), col("arank"))
     }
   )
@@ -937,36 +934,26 @@ object SimilarityQueries {
       .orderBy(col("cell"))
   }
 
-  /** BASE-corpus (vec_id % 10 <> 3) stored int8-IVF index for q_c71's
-    * append scenario — the shared [[graft.core.StoredArtifact]]
-    * lifecycle. Unlike the MinHash/BM25 base indexes, this one persists
-    * its MODEL with its codes: the Lloyd-trained centroid matrix (`cents`)
-    * and the (dim, nprobe, k) triple (`model`), so a warm serve — or the
-    * append path — re-binds the FROZEN quantizer deterministically
-    * without retraining. k·dim doubles ≤ 50 MB by the trainIvf cap: model
-    * parameters, not data.
+  /** The int8-IVF family's model step ([[StoredIndex.Ivf]]): train the
+    * coarse quantizer on the base slice and persist it at `root` —
+    * centroids (`cents`) and (dim, nprobe, k) (`model`) — so every later
+    * slice, serve or append re-binds the FROZEN quantizer without
+    * retraining. k·dim doubles ≤ 50 MB by the trainIvf cap.
     */
-  private val int8BaseBuilt = new graft.core.StoredArtifact("graft-int8-base")
+  private[graft] def writeFrozenModel(s: SparkSession, emb: DataFrame, root: String): Unit = {
+    val eb = graft.core.CachedRdds.registerDf(
+      embDoubleOf(emb).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val (cents, dim, nprobe) = trainIvfCents(s, eb)
+    import s.implicits._
+    cents.grouped(dim).zipWithIndex
+      .map { case (c, i) => (i, c.toSeq) }.toSeq
+      .toDF("cell", "ctr")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/cents")
+    Seq((dim, nprobe, cents.length / dim)).toDF("dim", "nprobe", "k")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/model")
+  }
 
-  private[graft] def int8BaseIndex(s: SparkSession, d: String): String =
-    int8BaseBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/embeddings.parquet"))) { path =>
-      val eb = graft.core.CachedRdds.registerDf(
-        embDouble(s, d).filter(col("vec_id") % 10 =!= 3)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      val (cents, dim, nprobe) = trainIvfCents(s, eb)
-      val fn = graft.functions.NearestCells.register(s, cents, dim)
-      buildInt8Index(s, eb, fn, s"$path/codes")
-      import s.implicits._
-      cents.grouped(dim).zipWithIndex
-        .map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("cell", "ctr")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/cents")
-      Seq((dim, nprobe, cents.length / dim)).toDF("dim", "nprobe", "k")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/model")
-    }
-
-  /** Re-bind the frozen quantizer persisted with a stored base index:
+  /** Re-bind the frozen quantizer persisted with a stored index:
     * (registered assignment-function name, nprobe, k).
     */
   private[graft] def frozenQuantizer(
@@ -983,91 +970,6 @@ object SimilarityQueries {
     }
     (graft.functions.NearestCells.register(s, cents, dim), nprobe, k)
   }
-
-  /** q_c130's SEGMENTED int8 index — base and batch codes each persisted
-    * as their own segment (the bm25/minhash/phrase segments pattern),
-    * with the frozen model (cents + (dim, nprobe, k)) carried alongside
-    * so every later verb is a function of the artifact alone. seg0 is
-    * the base index's codes; seg1 is the arriving vec_id % 10 = 3 batch
-    * coded under the FROZEN quantizer (q_c71's append discipline — the
-    * base floats are never re-read).
-    */
-  private val int8SegmentsBuilt =
-    new graft.core.StoredArtifact("graft-int8-segments")
-
-  private[graft] def int8SegmentsIndex(s: SparkSession, d: String): String =
-    int8SegmentsBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/embeddings.parquet"))) { path =>
-      val base = int8BaseIndex(s, d)
-      val (fn, _, _) = frozenQuantizer(s, base)
-      graft.functions.Int8Ops.register(s)
-      Seq("model", "cents").foreach { t =>
-        s.read.parquet(s"$base/$t").coalesce(1)
-          .write.mode("overwrite").parquet(s"$path/$t")
-      }
-      s.read.parquet(s"$base/codes")
-        .write.mode("overwrite").parquet(s"$path/seg0/codes")
-      embDouble(s, d).filter(col("vec_id") % 10 === 3)
-        .withColumn("cell", expr(s"element_at($fn(v, 1), 1)"))
-        .select(col("vec_id"), col("cell"), expr("pack_int8(v)").as("q8"))
-        .write.mode("overwrite").parquet(s"$path/seg1/codes")
-    }
-
-  /** The COMPACTED int8 artifact: segment code tables merged into one
-    * cell-range-sorted table, model carried through. Keyed on the
-    * segment directory's snapshot — compaction is a function of the
-    * stored segments alone (Int8CompactSpec deletes the corpus copy
-    * before compacting to prove it).
-    */
-  private val int8CompactedBuilt =
-    new graft.core.StoredArtifact("graft-int8-compacted")
-
-  private[graft] def int8CompactedIndex(s: SparkSession, segPath: String): String =
-    int8CompactedBuilt.getOrBuild(
-      segPath, graft.core.SessionMemo.snapshot(s, Seq(segPath))) { path =>
-      Seq("model", "cents").foreach { t =>
-        s.read.parquet(s"$segPath/$t").coalesce(1)
-          .write.mode("overwrite").parquet(s"$path/$t")
-      }
-      s.read.parquet(s"$segPath/seg0/codes", s"$segPath/seg1/codes")
-        .repartitionByRange(col("cell"), col("vec_id"))
-        .sortWithinPartitions(col("cell"), col("vec_id"))
-        .write.mode("overwrite").parquet(s"$path/codes")
-    }
-
-  /** q_c145's GC'd int8-IVF artifact — code segments built under the
-    * frozen quantizer, compacted with model/cents carried through, the
-    * q_c135 verdict recomputed, retired segment directories DELETED
-    * (atomically gated), journal written; its OWN artifact copy (GC is
-    * destructive by design — it never acts on q_c135's shared
-    * segments store).
-    */
-  private val int8GcBuilt = new graft.core.StoredArtifact("graft-int8-gc")
-
-  private[graft] def int8GcIndex(s: SparkSession, d: String): String =
-    int8GcBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/embeddings.parquet"))) { path =>
-      val base = int8BaseIndex(s, d)
-      val (fn, _, _) = frozenQuantizer(s, base)
-      graft.functions.Int8Ops.register(s)
-      s.read.parquet(s"$base/codes")
-        .write.mode("overwrite").parquet(s"$path/segments/seg0/codes")
-      embDouble(s, d).filter(col("vec_id") % 10 === 3)
-        .withColumn("cell", expr(s"element_at($fn(v, 1), 1)"))
-        .select(col("vec_id"), col("cell"), expr("pack_int8(v)").as("q8"))
-        .write.mode("overwrite").parquet(s"$path/segments/seg1/codes")
-      Seq("model", "cents").foreach { t =>
-        s.read.parquet(s"$base/$t").coalesce(1)
-          .write.mode("overwrite").parquet(s"$path/compacted/$t")
-      }
-      s.read.parquet(s"$path/segments/seg0/codes", s"$path/segments/seg1/codes")
-        .repartitionByRange(col("cell"), col("vec_id"))
-        .sortWithinPartitions(col("cell"), col("vec_id"))
-        .write.mode("overwrite").parquet(s"$path/compacted/codes")
-      TextQueries.writeGcLog(s, TextQueries.retirementGc(s,
-        Seq("seg0" -> s"$path/segments/seg0", "seg1" -> s"$path/segments/seg1"),
-        s"$path/compacted", Seq("codes" -> None)), path)
-    }
 
   /** q_c131's artifact-only stage-1: queries served from their own
     * stored codes, probe ranking and candidate scores both the
@@ -1129,7 +1031,8 @@ object SimilarityQueries {
     * and the uniform-fixture escalation k/4 → k/2.
     */
   private[graft] def ivfNprobeFrontier(s: SparkSession, d: String): DataFrame = {
-    val path = int8CompactedIndex(s, int8SegmentsIndex(s, d))
+    val path = StoredIndex.compacted(s, StoredIndex.Ivf,
+      StoredIndex.segments(s, StoredIndex.Ivf, d))
     val (fn, _, k) = frozenQuantizer(s, path)
     graft.functions.CosineSimilarity.register(s)
     graft.functions.Int8Ops.register(s)

@@ -762,7 +762,8 @@ object TextQueries {
       "q_c45_bm25_stored",
       Some(duckBm25FullCorpus)
     ) { (s, d) =>
-      bm25SearchStored(s, postingsIndex(s, d), Seq("hash", "join", "filter"))
+      bm25SearchStored(s, StoredIndex.full(s, StoredIndex.Bm25, d),
+        Seq("hash", "join", "filter"))
     },
 
     // ---- q_c46: vocabulary-scaling (Heaps) curve -------------------------
@@ -1253,7 +1254,7 @@ object TextQueries {
       "q_c70_bm25_append",
       Some(duckBm25FullCorpus)
     ) { (s, d) =>
-      val basePath = postingsBaseIndex(s, d)
+      val basePath = s"${StoredIndex.segments(s, StoredIndex.Bm25, d)}/seg0"
       val basePost = s.read.parquet(s"$basePath/postings")
       val baseStats = s.read.parquet(s"$basePath/stats")
       val (batchPost, batchStats) = postingsOf(
@@ -1288,7 +1289,8 @@ object TextQueries {
       "q_c123_bm25_compacted",
       Some(duckBm25FullCorpus)
     ) { (s, d) =>
-      bm25SearchStored(s, bm25CompactedIndex(s, bm25SegmentsIndex(s, d)),
+      bm25SearchStored(s, StoredIndex.compacted(s, StoredIndex.Bm25,
+          StoredIndex.segments(s, StoredIndex.Bm25, d)),
         Seq("hash", "join", "filter"))
     },
 
@@ -1942,7 +1944,7 @@ object TextQueries {
       "q_c103_phrase_search",
       Some(duckPhraseBrute)
     ) { (s, d) =>
-      phraseSearchStored(s, phraseIndex(s, d))
+      phraseSearchStored(s, StoredIndex.full(s, StoredIndex.Phrase, d))
     },
 
     // ---- q_c106: ordered proximity search over the same index ------------
@@ -1981,7 +1983,7 @@ object TextQueries {
              |  CAST(COUNT(DISTINCT doc_id) * 1000 // COUNT(DISTINCT CASE WHEN dist = 1 THEN doc_id END) AS BIGINT) AS expansion_pm
              |FROM occ GROUP BY w1, w2 ORDER BY phrase""".stripMargin)
     ) { (s, d) =>
-      proximitySearchStored(s, phraseIndex(s, d))
+      proximitySearchStored(s, StoredIndex.full(s, StoredIndex.Phrase, d))
     },
 
     // ---- q_c107: incremental positional-index append ----------------------
@@ -1999,7 +2001,7 @@ object TextQueries {
       "q_c107_phrase_append",
       Some(duckPhraseBrute)
     ) { (s, d) =>
-      val basePath = phraseBaseIndex(s, d)
+      val basePath = s"${StoredIndex.segments(s, StoredIndex.Phrase, d)}/seg0"
       val batch = Tables(s, d, "documents").filter(col("doc_id") % 10 === 3)
       val post = s.read.parquet(s"$basePath/postings")
         .unionByName(positionalTokens(batch))
@@ -2024,7 +2026,8 @@ object TextQueries {
       "q_c128_phrase_compacted",
       Some(duckPhraseBrute)
     ) { (s, d) =>
-      phraseSearchStored(s, phraseCompactedIndex(s, phraseSegmentsIndex(s, d)))
+      phraseSearchStored(s, StoredIndex.compacted(s, StoredIndex.Phrase,
+        StoredIndex.segments(s, StoredIndex.Phrase, d)))
     },
 
     // ---- q_c108: frequency-of-frequencies spectrum + Good-Turing ---------
@@ -2219,12 +2222,7 @@ object TextQueries {
     // driver-side fold and proves tamper sensitivity (a dropped and a
     // forged row each flip retire to 0).
     QueryDef("q_c133_segment_retirement", None) { (s, d) =>
-      val segPath = bm25SegmentsIndex(s, d)
-      val cPath = bm25CompactedIndex(s, segPath)
-      segmentRetirementPlan(
-        Seq("seg0" -> s.read.parquet(s"$segPath/seg0/postings"),
-          "seg1" -> s.read.parquet(s"$segPath/seg1/postings")),
-        s.read.parquet(s"$cPath/postings"))
+      StoredIndex.verdict(s, StoredIndex.Bm25, d).drop("tbl")
     },
 
     // ---- q_c136: phrase-index segment retirement (both table shapes) --------
@@ -2241,18 +2239,7 @@ object TextQueries {
     // blocks from the parquet alone (tools/compare_oracle.py), length-
     // prefixing the string terms exactly as segmentRetirementPlan does.
     QueryDef("q_c136_phrase_retirement", None) { (s, d) =>
-      val segPath = phraseSegmentsIndex(s, d)
-      val cPath = phraseCompactedIndex(s, segPath)
-      def block(tbl: String, weight: Option[String]) =
-        segmentRetirementPlan(
-          Seq("seg0" -> s.read.parquet(s"$segPath/seg0/$tbl"),
-            "seg1" -> s.read.parquet(s"$segPath/seg1/$tbl")),
-          s.read.parquet(s"$cPath/$tbl"), weight)
-          .select(lit(tbl).as("tbl"), col("segment"), col("n_rows"),
-            col("checksum_a"), col("checksum_b"), col("retire"))
-      block("postings", None)
-        .unionByName(block("bigrams", Some("cnt")))
-        .orderBy(col("tbl"), col("segment"))
+      StoredIndex.verdict(s, StoredIndex.Phrase, d)
     },
 
     // ---- q_c137: quality-classifier TRAINING (distributed logistic GD) ------
@@ -2384,8 +2371,8 @@ object TextQueries {
     // search reads only the query terms' postings. Nothing rescans the
     // corpus.
     QueryDef("q_c141_retirement_gc", None) { (s, d) =>
-      val path = bm25GcIndex(s, d)
-      gcServe(s, path,
+      val path = StoredIndex.gc(s, StoredIndex.Bm25, d)
+      StoredIndex.gcServe(s, path,
         bm25SearchStored(s, s"$path/compacted", Seq("hash", "join", "filter")))
         .orderBy(col("bm25").desc, col("doc_id"))
     },
@@ -2398,16 +2385,17 @@ object TextQueries {
     // drop when BOTH tables certify — the q_c136 "live and die
     // together" invariant, now enforced by the ACTION. Frame = the
     // q_c103 phrase search served from the post-GC compacted artifact
-    // + the GC outcome ([[gcServe]]). Rows-only (stored artifacts);
-    // RetirementGcSpec proves post-GC search ≡ the pre-GC segment-union
-    // search with the corpus deleted first; DuckDB reproduces the frame
-    // from the GC'd artifact alone (tools/compare_oracle.py).
+    // + the GC outcome ([[StoredIndex.gcServe]]). Rows-only (stored
+    // artifacts); RetirementGcSpec proves post-GC search ≡ the pre-GC
+    // segment-union search with the corpus deleted first; DuckDB
+    // reproduces the frame from the GC'd artifact alone
+    // (tools/compare_oracle.py).
     //
     // 100 TB shape: digests are one column-pruned scan per table into
     // additive 1-row state; the search reads only the top-phrase terms.
     QueryDef("q_c146_phrase_gc", None) { (s, d) =>
-      val path = phraseGcIndex(s, d)
-      gcServe(s, path, phraseSearchStored(s, s"$path/compacted"))
+      val path = StoredIndex.gc(s, StoredIndex.Phrase, d)
+      StoredIndex.gcServe(s, path, phraseSearchStored(s, s"$path/compacted"))
         .orderBy(col("phrase"))
     },
 
@@ -2425,116 +2413,12 @@ object TextQueries {
     // 100 TB shape: four 1-row aggregations over O(segments)-row
     // journals + four directory listings. Nothing touches data.
     QueryDef("q_c148_gc_audit", None) { (s, d) =>
-      Seq(
-        "bm25" -> bm25GcIndex(s, d),
-        "ivf" -> SimilarityQueries.int8GcIndex(s, d),
-        "minhash" -> DedupQueries.minhashGcIndex(s, d),
-        "phrase" -> phraseGcIndex(s, d))
-        .map { case (fam, p) => gcAuditRow(s, fam, p) }
+      StoredIndex.families
+        .map(f => StoredIndex.gcAuditRow(s, f.name, StoredIndex.gc(s, f, d)))
         .reduce(_.unionByName(_))
         .orderBy(col("family"))
     }
   )
-
-  /** One q_c148 audit row over a GC'd artifact's journal + live
-    * directory listing.
-    */
-  private def gcAuditRow(
-      s: org.apache.spark.sql.SparkSession, fam: String,
-      path: String): org.apache.spark.sql.DataFrame = {
-    val segDir = new org.apache.hadoop.fs.Path(s"$path/segments")
-    val fs = segDir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val nLive = if (fs.exists(segDir)) fs.listStatus(segDir).length.toLong else 0L
-    s.read.parquet(s"$path/gc_log").agg(
-        countDistinct(col("tbl")).cast("long").as("n_tables"),
-        count(lit(1)).cast("long").as("n_journal_rows"),
-        countDistinct(when(col("action") === "dropped", col("segment")))
-          .cast("long").as("n_dropped"),
-        min(col("retire")).cast("long").as("all_certified"))
-      .select(lit(fam).as("family"), col("n_tables"), col("n_journal_rows"),
-        col("n_dropped"), col("all_certified"))
-      .withColumn("n_live_segments", lit(nLive))
-  }
-
-  /** q_c133's verdict frame over any segment family: one digest row per
-    * segment plus the compacted table's row, every row carrying the
-    * atomic `retire` verdict (1 iff Σ segment digests == the compacted
-    * digest on both 64-bit chunks AND row counts conserve). The
-    * canonical row string pins column order, so schema drift between a
-    * segment and the compacted table also breaks the digest (by
-    * design — retiring segments whose reader would decode differently
-    * is exactly the mistake this gate exists to catch).
-    */
-  private[graft] def segmentRetirementPlan(
-      segments: Seq[(String, org.apache.spark.sql.DataFrame)],
-      compacted: org.apache.spark.sql.DataFrame,
-      weightCol: Option[String] = None): org.apache.spark.sql.DataFrame = {
-    val M = "1152921504606846976" // 2^60
-    def digestOf(name: String, df: org.apache.spark.sql.DataFrame) = {
-      // BINARY columns canonicalize through hex: concat_ws would cast
-      // raw bytes to a (lossy) UTF-8 string, collapsing distinct codes
-      // onto replacement characters — the int8-IVF q8 column is exactly
-      // that shape. hex() is injective and engine-neutral. STRING
-      // columns are length-prefixed (`<len>:<value>`) so the '|'-joined
-      // row encoding stays injective even when a value CONTAINS '|'
-      // (ADVICE round 16): the prefix makes the stream uniquely
-      // decodable (read digits to ':', take len chars, expect '|'), so
-      // adjacent-column content can never shift across the separator.
-      // Numeric/hex renderings can't contain '|' and need no prefix —
-      // and keeping them bare keeps the digest cheap and the DuckDB
-      // replay one expression per column.
-      val cols = df.schema.fields
-        .filterNot(f => weightCol.contains(f.name))
-        .sortBy(_.name).map { f =>
-          f.dataType match {
-            case org.apache.spark.sql.types.BinaryType => hex(col(f.name))
-            case org.apache.spark.sql.types.StringType =>
-              concat(length(col(f.name)).cast("string"), lit(":"), col(f.name))
-            case _ => col(f.name)
-          }
-        }
-      // WEIGHTED mode (weightCol set): digest = Σ chunk(key) · weight —
-      // linear in the weight, so it is invariant under the aggregation
-      // compaction applies to additive tables (Σ over segment rows of
-      // chunk·cnt_i = Σ over compacted keys of chunk·Σcnt_i): the
-      // retirement law for tables whose compaction SUMS rather than
-      // unions (the phrase bigram table). n_rows then reports the total
-      // weight (the conserved quantity) instead of the row count.
-      // Unweighted mode is the wt = 1 special case and produces the
-      // EXACT digests of the original formulation (Σ(c mod M) mod M =
-      // Σc mod M — mod is additive).
-      val wt = weightCol.map(c => col(c).cast("decimal(18,0)"))
-        .getOrElse(lit(1).cast("decimal(18,0)"))
-      df.select(md5(concat_ws("|", cols.toIndexedSeq: _*)).as("h"), wt.as("wt"))
-        .select(PipelineQueries.md5ChunkA.as("c1"),
-          PipelineQueries.md5ChunkB.as("c2"), col("wt"))
-        .agg(sum(col("wt")).cast("long").as("n_rows"),
-          expr(s"CAST(SUM(CAST(c1 % $M AS DECIMAL(20,0)) * wt) % $M AS BIGINT)")
-            .as("checksum_a"),
-          expr(s"CAST(SUM(CAST(c2 % $M AS DECIMAL(20,0)) * wt) % $M AS BIGINT)")
-            .as("checksum_b"))
-        .select(lit(name).as("segment"), col("n_rows"),
-          col("checksum_a"), col("checksum_b"))
-    }
-    val segRows = segments.map { case (n, df) => digestOf(n, df) }
-      .reduce(_ unionByName _)
-    val compRow = digestOf("compacted", compacted)
-    // Σ over the per-segment 60-bit digests, re-reduced mod 2^60 — the
-    // additive law that makes the union provable without a row-level diff
-    val segTotal = segRows.agg(
-      sum(col("n_rows")).cast("long").as("u_rows"),
-      expr(s"CAST(SUM(CAST(checksum_a AS DECIMAL(38,0))) % $M AS BIGINT)").as("u_a"),
-      expr(s"CAST(SUM(CAST(checksum_b AS DECIMAL(38,0))) % $M AS BIGINT)").as("u_b"))
-    val verdict = segTotal.crossJoin( // two 1-row frames
-        compRow.select(col("n_rows").as("c_rows"),
-          col("checksum_a").as("c_a"), col("checksum_b").as("c_b")))
-      .select(when(col("u_rows") === col("c_rows")
-        && col("u_a") === col("c_a") && col("u_b") === col("c_b"), 1L)
-        .otherwise(0L).as("retire"))
-    segRows.unionByName(compRow)
-      .crossJoin(broadcast(verdict))
-      .orderBy(col("segment"))
-  }
 
   /** Adjacent-bigram frame (doc_id, w1, w2) over `documents` — the shared
     * generator for q_c80's estimation and q_c84's evaluation (map-only,
@@ -2811,16 +2695,9 @@ object TextQueries {
         .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
     }
 
-  /** Build the persistent BM25 postings index under `path`: postings
-    * (term, doc_id, tf, dl) RANGE-PARTITIONED and sorted by term — so
-    * every parquet row group covers a narrow term interval and a term
-    * predicate prunes row groups by min/max stats — plus the 2-scalar
-    * corpus stats table. One corpus tokenize, run once per corpus
-    * version (the buildInt8Index lifecycle).
-    */
   /** The (postings, stats) pair for a documents frame — shared by the
-    * full-corpus index build, the base-corpus build (q_c70's append
-    * scenario), and the in-flight batch side of the append itself.
+    * stored index's slice recipe ([[buildPostingsIndex]]) and the
+    * in-flight batch side of the q_c70 append.
     */
   private def postingsOf(docs: org.apache.spark.sql.DataFrame)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
@@ -2837,48 +2714,22 @@ object TextQueries {
     (post, stats)
   }
 
+  /** The BM25 family's slice recipe ([[StoredIndex.Bm25]]): postings
+    * (term, doc_id, tf, dl) RANGE-PARTITIONED and sorted by term — so
+    * every parquet row group covers a narrow term interval and a term
+    * predicate prunes row groups by min/max stats — plus the 2-scalar
+    * additive (n_docs, tot) stats table, over a documents frame (the
+    * whole corpus or one segment's slice). One tokenize of that frame.
+    */
   private[graft] def buildPostingsIndex(
-      s: org.apache.spark.sql.SparkSession, d: String, path: String): Unit = {
-    val (post, stats) = postingsOf(Tables(s, d, "documents"))
+      docs: org.apache.spark.sql.DataFrame, path: String): Unit = {
+    val (post, stats) = postingsOf(docs)
     post
       .repartitionByRange(col("term"))
       .sortWithinPartitions(col("term"), col("doc_id"))
       .write.mode("overwrite").parquet(s"$path/postings")
     stats.write.mode("overwrite").parquet(s"$path/stats")
   }
-
-  /** Session-stable index location for a corpus dir — the shared
-    * [[graft.core.StoredArtifact]] lifecycle (content-snapshot guard,
-    * per-key build latch, deferred deletion of abandoned snapshots): a
-    * warm session reuses the on-disk index across queries — the whole
-    * point of the stored form.
-    */
-  private val postingsBuilt = new graft.core.StoredArtifact("graft-bm25-index")
-
-  private[graft] def postingsIndex(
-      s: org.apache.spark.sql.SparkSession, d: String): String =
-    postingsBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))) {
-      path => buildPostingsIndex(s, d, path)
-    }
-
-  /** The BASE-corpus (doc_id % 10 <> 3) postings index for q_c70's
-    * append scenario — same lifecycle, its own cache key.
-    */
-  private val postingsBaseBuilt = new graft.core.StoredArtifact("graft-bm25-base")
-
-  private[graft] def postingsBaseIndex(
-      s: org.apache.spark.sql.SparkSession, d: String): String =
-    postingsBaseBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))) { path =>
-      val (post, stats) = postingsOf(
-        Tables(s, d, "documents").filter(col("doc_id") % 10 =!= 3))
-      post
-        .repartitionByRange(col("term"))
-        .sortWithinPartitions(col("term"), col("doc_id"))
-        .write.mode("overwrite").parquet(s"$path/postings")
-      stats.write.mode("overwrite").parquet(s"$path/stats")
-    }
 
   /** The full-corpus BM25 top-20 oracle — ONE text shared by q_c45
     * (stored search), q_c70 (append) and q_c123 (compaction): all three
@@ -2909,176 +2760,6 @@ object TextQueries {
       |  FROM tf t JOIN dl d USING (doc_id) JOIN dfq q USING (term) CROSS JOIN stats s),
       |bm AS (SELECT doc_id, CAST(SUM(tscore) AS DOUBLE) AS bm25
       |       FROM scored GROUP BY 1)""".stripMargin
-
-  /** q_c123's SEGMENTED index: the layout the q_c70 append discipline
-    * produces in production — each batch persisted as its own
-    * term-sorted postings segment (seg0 = the base corpus, seg1 = the
-    * arriving doc_id % 10 = 3 batch) plus a per-segment row of the
-    * additive (n_docs, tot) stats. Building a segment costs one
-    * tokenize of THAT slice only.
-    */
-  private val bm25SegmentsBuilt = new graft.core.StoredArtifact("graft-bm25-segments")
-
-  private[graft] def bm25SegmentsIndex(
-      s: org.apache.spark.sql.SparkSession, d: String): String =
-    bm25SegmentsBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))) { path =>
-      writeBm25Segment(Tables(s, d, "documents")
-        .filter(col("doc_id") % 10 =!= 3), s"$path/seg0")
-      writeBm25Segment(Tables(s, d, "documents")
-        .filter(col("doc_id") % 10 === 3), s"$path/seg1")
-    }
-
-  private def writeBm25Segment(
-      docs: org.apache.spark.sql.DataFrame, segPath: String): Unit = {
-    val (post, stats) = postingsOf(docs)
-    post
-      .repartitionByRange(col("term"))
-      .sortWithinPartitions(col("term"), col("doc_id"))
-      .write.mode("overwrite").parquet(s"$segPath/postings")
-    stats.write.mode("overwrite").parquet(s"$segPath/stats")
-  }
-
-  /** The COMPACTED artifact: segments merged back into one
-    * term-range-sorted postings table + summed stats. Keyed on the
-    * SEGMENT directory's content snapshot — compaction is a function of
-    * the stored segments alone (it never reads the corpus), and the key
-    * says so.
-    */
-  private val bm25CompactedBuilt = new graft.core.StoredArtifact("graft-bm25-compacted")
-
-  private[graft] def bm25CompactedIndex(
-      s: org.apache.spark.sql.SparkSession, segPath: String): String =
-    bm25CompactedBuilt.getOrBuild(
-      segPath, graft.core.SessionMemo.snapshot(s, Seq(segPath))) { path =>
-      s.read.parquet(s"$segPath/seg0/postings", s"$segPath/seg1/postings")
-        .repartitionByRange(col("term"))
-        .sortWithinPartitions(col("term"), col("doc_id"))
-        .write.mode("overwrite").parquet(s"$path/postings")
-      s.read.parquet(s"$segPath/seg0/stats", s"$segPath/seg1/stats")
-        .agg(sum(col("n_docs")).cast("double").as("n_docs"),
-          sum(col("tot")).cast("double").as("tot"))
-        .write.mode("overwrite").parquet(s"$path/stats")
-    }
-
-  /** The retirement GC VERB — the action the q_c133-class verdict
-    * certifies, family-general: `tables` names every table a segment
-    * directory stores, with the optional weight column of the
-    * weighted-digest (per-key SUM compaction) shape — ("postings",
-    * None) for BM25, ("sigs", None) for MinHash, ("codes", None) for
-    * int8-IVF, and BOTH ("postings", None) + ("bigrams", Some("cnt"))
-    * for the phrase family, whose tables live and die together.
-    * Recomputes the digest verdict over the given segment table paths
-    * vs the compacted tables, and ONLY if EVERY (table × segment)
-    * verdict fires (Σ segment digests ≡ compacted digest on both
-    * 64-bit chunks AND rows conserve) deletes the segment directories;
-    * otherwise every directory is kept — the gate can refuse
-    * (RetirementGcSpec proves a tampered compaction keeps the
-    * segments). Returns the journal rows (tbl, segment, n_rows,
-    * checksum_a, checksum_b, retire, action) the caller persists as
-    * the artifact's gc_log: the deletion decision stays auditable by
-    * any engine after the segments are gone.
-    */
-  private[graft] def retirementGc(
-      s: org.apache.spark.sql.SparkSession,
-      segments: Seq[(String, String)],
-      compactedRoot: String,
-      tables: Seq[(String, Option[String])])
-      : Seq[(String, String, Long, Long, Long, Long, String)] = {
-    val verdicts = tables.map { case (tbl, weight) =>
-      tbl -> segmentRetirementPlan(
-        segments.map { case (n, p) => n -> s.read.parquet(s"$p/$tbl") },
-        s.read.parquet(s"$compactedRoot/$tbl"), weight)
-        .collect()
-    }
-    // ALL tables of ALL segments must certify before ANY directory is
-    // dropped: the compacted set replaces the whole segment set, so a
-    // single failing (table, segment) means the compaction is not a
-    // faithful union and nothing may go
-    val retireAll =
-      verdicts.forall(_._2.forall(_.getAs[Long]("retire") == 1L))
-    if (retireAll) {
-      val conf = s.sparkContext.hadoopConfiguration
-      segments.foreach { case (_, p) =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(conf).delete(hp, true); ()
-      }
-    }
-    verdicts.flatMap { case (tbl, verdict) =>
-      verdict.toSeq.map { r =>
-        val seg = r.getAs[String]("segment")
-        val action =
-          if (seg == "compacted") "kept"
-          else if (retireAll) "dropped" else "kept"
-        (tbl, seg, r.getAs[Long]("n_rows"), r.getAs[Long]("checksum_a"),
-          r.getAs[Long]("checksum_b"), r.getAs[Long]("retire"), action)
-      }
-    }
-  }
-
-  /** Persist [[retirementGc]] journal rows as a GC artifact's gc_log. */
-  private[graft] def writeGcLog(
-      s: org.apache.spark.sql.SparkSession,
-      log: Seq[(String, String, Long, Long, Long, Long, String)],
-      path: String): Unit = {
-    val sp = s
-    import sp.implicits._
-    log.toDF("tbl", "segment", "n_rows", "checksum_a", "checksum_b",
-        "retire", "action")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/gc_log")
-  }
-
-  /** The GC proof-of-service tail shared by all four families' GC rows
-    * (q_c141/q_c144/q_c145/q_c146): the family's search frame served
-    * from the post-GC artifact, with the GC outcome on every row —
-    * n_dropped re-counted from the journal (DISTINCT segments with a
-    * dropped action — a multi-table family journals one row per table
-    * but drops each directory once) and n_live_segments from the LIVE
-    * directory listing, so a drop the engine claimed but did not
-    * perform (or performed but did not journal) contradicts the frame.
-    */
-  private[graft] def gcServe(
-      s: org.apache.spark.sql.SparkSession, path: String,
-      search: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val nDropped = s.read.parquet(s"$path/gc_log")
-      .filter(col("action") === "dropped")
-      .agg(countDistinct(col("segment")).cast("long").as("n_dropped"))
-    val segDir = new org.apache.hadoop.fs.Path(s"$path/segments")
-    val fs = segDir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val nLive = if (fs.exists(segDir)) fs.listStatus(segDir).length.toLong else 0L
-    search
-      .crossJoin(broadcast(nDropped))
-      .withColumn("n_live_segments", lit(nLive))
-  }
-
-  /** q_c141's GC'd BM25 artifact — segments built, compacted, verdict
-    * computed, retired segments DELETED, journal written; its OWN
-    * artifact copy (the shared q_c123 segments artifact must stay
-    * intact for q_c133's replay — GC is destructive by design, so it
-    * never acts on another query's store).
-    */
-  private val bm25GcBuilt = new graft.core.StoredArtifact("graft-bm25-gc")
-
-  private[graft] def bm25GcIndex(
-      s: org.apache.spark.sql.SparkSession, d: String): String =
-    bm25GcBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))) { path =>
-      writeBm25Segment(Tables(s, d, "documents")
-        .filter(col("doc_id") % 10 =!= 3), s"$path/segments/seg0")
-      writeBm25Segment(Tables(s, d, "documents")
-        .filter(col("doc_id") % 10 === 3), s"$path/segments/seg1")
-      s.read.parquet(s"$path/segments/seg0/postings", s"$path/segments/seg1/postings")
-        .repartitionByRange(col("term"))
-        .sortWithinPartitions(col("term"), col("doc_id"))
-        .write.mode("overwrite").parquet(s"$path/compacted/postings")
-      s.read.parquet(s"$path/segments/seg0/stats", s"$path/segments/seg1/stats")
-        .agg(sum(col("n_docs")).cast("double").as("n_docs"),
-          sum(col("tot")).cast("double").as("tot"))
-        .write.mode("overwrite").parquet(s"$path/compacted/stats")
-      writeGcLog(s, retirementGc(s,
-        Seq("seg0" -> s"$path/segments/seg0", "seg1" -> s"$path/segments/seg1"),
-        s"$path/compacted", Seq("postings" -> None)), path)
-    }
 
   /** BM25 top-20 served from the stored index: the scan reads ONLY the
     * query terms' postings (term IN (...) pushes into parquet; row-group
@@ -3166,9 +2847,10 @@ object TextQueries {
       |  CAST(MAX(doc_id) AS BIGINT) AS last_doc
       |FROM hits GROUP BY w1, w2 ORDER BY phrase""".stripMargin
 
-  /** Build the positional phrase index at `path` over a documents frame
-    * (the FULL corpus for q_c103/q_c106, the doc_id % 10 <> 3 base for
-    * q_c107 — ONE recipe, so the two stores cannot drift in layout or
+  /** The phrase family's slice recipe ([[StoredIndex.Phrase]]): the
+    * positional phrase index at `path` over a documents frame (the FULL
+    * corpus for q_c103/q_c106, one segment's slice for q_c107/q_c128 —
+    * ONE recipe, so the stores cannot drift in layout or
     * tokenization): term-range-partitioned positional postings
     * (term, doc_id, pos) — the q_c45 layout plus the position column —
     * and the bigram-count table (w1, w2, cnt) derived through the SHARED
@@ -3195,103 +2877,6 @@ object TextQueries {
       ()
     }
   }
-
-  private val phraseBuilt = new graft.core.StoredArtifact("graft-phrase-index")
-
-  /** Session-stable phrase-index location for a corpus dir — the shared
-    * [[graft.core.StoredArtifact]] lifecycle (content-snapshot guard,
-    * per-key build latch, deferred deletion), exactly [[postingsIndex]].
-    */
-  private[graft] def phraseIndex(
-      s: org.apache.spark.sql.SparkSession, d: String): String =
-    phraseBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))) {
-      path => buildPhraseIndex(s, Tables(s, d, "documents"), path)
-    }
-
-  /** The BASE-corpus (doc_id % 10 <> 3) phrase index for q_c107's append
-    * scenario — same lifecycle and the same [[buildPhraseIndex]] recipe,
-    * its own cache key (the postingsBaseIndex pattern).
-    */
-  private val phraseBaseBuilt = new graft.core.StoredArtifact("graft-phrase-base")
-
-  private[graft] def phraseBaseIndex(
-      s: org.apache.spark.sql.SparkSession, d: String): String =
-    phraseBaseBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))) { path =>
-      buildPhraseIndex(s,
-        Tables(s, d, "documents").filter(col("doc_id") % 10 =!= 3), path)
-    }
-
-  /** q_c128's SEGMENTED phrase index — each corpus slice built as its
-    * own segment via the SAME [[buildPhraseIndex]] recipe (seg0 = the
-    * doc_id % 10 <> 3 base, seg1 = the arriving batch), the bm25
-    * segments pattern.
-    */
-  private val phraseSegmentsBuilt = new graft.core.StoredArtifact("graft-phrase-segments")
-
-  private[graft] def phraseSegmentsIndex(
-      s: org.apache.spark.sql.SparkSession, d: String): String =
-    phraseSegmentsBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))) { path =>
-      buildPhraseIndex(s,
-        Tables(s, d, "documents").filter(col("doc_id") % 10 =!= 3), s"$path/seg0")
-      buildPhraseIndex(s,
-        Tables(s, d, "documents").filter(col("doc_id") % 10 === 3), s"$path/seg1")
-    }
-
-  /** The COMPACTED phrase artifact: segment postings merged into one
-    * term-range-sorted table, segment bigram tables summed. Keyed on the
-    * segment directory's snapshot — compaction is a function of the
-    * stored segments alone.
-    */
-  private val phraseCompactedBuilt = new graft.core.StoredArtifact("graft-phrase-compacted")
-
-  private[graft] def phraseCompactedIndex(
-      s: org.apache.spark.sql.SparkSession, segPath: String): String =
-    phraseCompactedBuilt.getOrBuild(
-      segPath, graft.core.SessionMemo.snapshot(s, Seq(segPath))) { path =>
-      s.read.parquet(s"$segPath/seg0/postings", s"$segPath/seg1/postings")
-        .repartitionByRange(col("term"))
-        .sortWithinPartitions(col("term"), col("doc_id"), col("pos"))
-        .write.mode("overwrite").parquet(s"$path/postings")
-      s.read.parquet(s"$segPath/seg0/bigrams", s"$segPath/seg1/bigrams")
-        .groupBy(col("w1"), col("w2"))
-        .agg(sum(col("cnt")).cast("long").as("cnt"))
-        .write.mode("overwrite").parquet(s"$path/bigrams")
-    }
-
-  /** q_c146's GC'd phrase artifact — segments built, compacted (postings
-    * by union, bigrams by per-key sum), BOTH tables' verdicts computed,
-    * retired segment directories DELETED only when every verdict fires,
-    * journal written; its OWN artifact copy (GC is destructive by
-    * design — it never acts on q_c136's shared segments store).
-    */
-  private val phraseGcBuilt = new graft.core.StoredArtifact("graft-phrase-gc")
-
-  private[graft] def phraseGcIndex(
-      s: org.apache.spark.sql.SparkSession, d: String): String =
-    phraseGcBuilt.getOrBuild(
-      d, graft.core.SessionMemo.snapshot(s, Seq(s"$d/documents.parquet"))) { path =>
-      buildPhraseIndex(s,
-        Tables(s, d, "documents").filter(col("doc_id") % 10 =!= 3),
-        s"$path/segments/seg0")
-      buildPhraseIndex(s,
-        Tables(s, d, "documents").filter(col("doc_id") % 10 === 3),
-        s"$path/segments/seg1")
-      s.read.parquet(s"$path/segments/seg0/postings", s"$path/segments/seg1/postings")
-        .repartitionByRange(col("term"))
-        .sortWithinPartitions(col("term"), col("doc_id"), col("pos"))
-        .write.mode("overwrite").parquet(s"$path/compacted/postings")
-      s.read.parquet(s"$path/segments/seg0/bigrams", s"$path/segments/seg1/bigrams")
-        .groupBy(col("w1"), col("w2"))
-        .agg(sum(col("cnt")).cast("long").as("cnt"))
-        .write.mode("overwrite").parquet(s"$path/compacted/bigrams")
-      writeGcLog(s, retirementGc(s,
-        Seq("seg0" -> s"$path/segments/seg0", "seg1" -> s"$path/segments/seg1"),
-        s"$path/compacted",
-        Seq("postings" -> None, "bigrams" -> Some("cnt"))), path)
-    }
 
   /** The top-`nPhrases` corpus bigrams (count-desc, lexicographic
     * tie-break — a total order, so both engines cut the same set) from a

@@ -524,15 +524,17 @@ object StreamingOps {
   /** Serve q_c71's search over stored base codes ∪ streamed code state —
     * the same base-∪-delta read [[phraseAppendServe]] does for postings;
     * serve ≡ the batch append because the code rows are final on arrival.
+    * `indexPath` is the int8 segments artifact: frozen model at its root,
+    * base codes in `seg0`.
     */
   def ivfAppendServe(
-      s: SparkSession, basePath: String, codeState: DataFrame,
+      s: SparkSession, indexPath: String, codeState: DataFrame,
       e: DataFrame): DataFrame = {
     val (fn, nprobe, _) =
-      graft.operators.SimilarityQueries.frozenQuantizer(s, basePath)
+      graft.operators.SimilarityQueries.frozenQuantizer(s, indexPath)
     graft.operators.SimilarityQueries.ivfSearchCodes(
       s,
-      s.read.parquet(s"$basePath/codes").unionByName(
+      s.read.parquet(s"$indexPath/seg0/codes").unionByName(
         codeState.select(col("vec_id"), col("cell"), col("q8"))),
       e, fn, nprobe)
   }
@@ -542,11 +544,11 @@ object StreamingOps {
     * ([[graft.operators.SimilarityQueries.ivfDriftFromCounts]]).
     */
   def ivfDriftServe(
-      s: SparkSession, basePath: String, cellState: DataFrame): DataFrame = {
+      s: SparkSession, indexPath: String, cellState: DataFrame): DataFrame = {
     val (_, _, k) =
-      graft.operators.SimilarityQueries.frozenQuantizer(s, basePath)
+      graft.operators.SimilarityQueries.frozenQuantizer(s, indexPath)
     graft.operators.SimilarityQueries.ivfDriftFromCounts(
-      s, s"$basePath/codes",
+      s, s"$indexPath/seg0/codes",
       cellState.select(col("cell"), col("batch_cnt").cast("long").as("batch_cnt")),
       k)
   }

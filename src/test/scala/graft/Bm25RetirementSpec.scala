@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.TextQueries
+import graft.operators.StoredIndex
 
 /** q_c133 — the segment-retirement verdict (the GC half of the
   * stored-index lifecycle): additive per-segment digests prove the
@@ -49,7 +49,7 @@ class Bm25RetirementSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("digest equals an independent driver-side fold of the segment rows") {
-    val segPath = TextQueries.bm25SegmentsIndex(spark, sf)
+    val segPath = StoredIndex.segments(spark, StoredIndex.Bm25, sf)
     val rows = spark.read.parquet(s"$segPath/seg0/postings").collect()
     // canonical row string: columns in SORTED NAME order, '|'-joined —
     // replicate with java MD5 and BigInt chunk sums
@@ -80,14 +80,14 @@ class Bm25RetirementSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a dropped row and a forged row each flip the verdict to 0") {
-    val segPath = TextQueries.bm25SegmentsIndex(spark, sf)
+    val segPath = StoredIndex.segments(spark, StoredIndex.Bm25, sf)
     val segs = Seq(
       "seg0" -> spark.read.parquet(s"$segPath/seg0/postings"),
       "seg1" -> spark.read.parquet(s"$segPath/seg1/postings"))
     val comp = spark.read.parquet(
-      s"${TextQueries.bm25CompactedIndex(spark, segPath)}/postings")
+      s"${StoredIndex.compacted(spark, StoredIndex.Bm25, segPath)}/postings")
     def verdict(c: org.apache.spark.sql.DataFrame): Seq[Long] =
-      TextQueries.segmentRetirementPlan(segs, c)
+      StoredIndex.segmentRetirementPlan(segs, c)
         .select(col("retire")).collect().map(_.getLong(0)).toSeq
     assert(verdict(comp).forall(_ == 1L))
     // drop one arbitrary posting row
@@ -102,9 +102,9 @@ class Bm25RetirementSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("the verb is family-general: MinHash signature segments retire too") {
     import graft.operators.DedupQueries
-    val segPath = DedupQueries.minhashSegmentsIndex(spark, sf)
-    val cPath = DedupQueries.minhashCompactedIndex(spark, segPath)
-    val out = TextQueries.segmentRetirementPlan(
+    val segPath = StoredIndex.segments(spark, StoredIndex.MinHash, sf)
+    val cPath = StoredIndex.compacted(spark, StoredIndex.MinHash, segPath)
+    val out = StoredIndex.segmentRetirementPlan(
         Seq("seg0" -> spark.read.parquet(s"$segPath/seg0/sigs"),
           "seg1" -> spark.read.parquet(s"$segPath/seg1/sigs")),
         spark.read.parquet(s"$cPath/sigs"))
@@ -118,10 +118,10 @@ class Bm25RetirementSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("binary artifacts retire too: int8-IVF code segments (hex canonicalization)") {
     import graft.operators.SimilarityQueries
-    val segPath = SimilarityQueries.int8SegmentsIndex(spark, sf)
-    val cPath = SimilarityQueries.int8CompactedIndex(spark, segPath)
+    val segPath = StoredIndex.segments(spark, StoredIndex.Ivf, sf)
+    val cPath = StoredIndex.compacted(spark, StoredIndex.Ivf, segPath)
     def seg(p: String) = spark.read.parquet(p)
-    val out = TextQueries.segmentRetirementPlan(
+    val out = StoredIndex.segmentRetirementPlan(
         Seq("seg0" -> seg(s"$segPath/seg0/codes"),
           "seg1" -> seg(s"$segPath/seg1/codes")),
         seg(s"$cPath/codes"))
@@ -135,7 +135,7 @@ class Bm25RetirementSpec extends AnyFunSuite with BeforeAndAfterAll {
     val forged = comp.exceptAll(first).unionByName(
       first.selectExpr("vec_id", "cell",
         "concat(CAST(X'7f' AS BINARY), substring(q8, 2)) AS q8"))
-    val verdicts = TextQueries.segmentRetirementPlan(
+    val verdicts = StoredIndex.segmentRetirementPlan(
         Seq("seg0" -> seg(s"$segPath/seg0/codes"),
           "seg1" -> seg(s"$segPath/seg1/codes")),
         forged)
@@ -147,11 +147,11 @@ class Bm25RetirementSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("aggregated tables retire via the weighted digest: phrase bigrams") {
     import org.apache.spark.sql.functions.col
-    val segPath = TextQueries.phraseSegmentsIndex(spark, sf)
-    val cPath = TextQueries.phraseCompactedIndex(spark, segPath)
+    val segPath = StoredIndex.segments(spark, StoredIndex.Phrase, sf)
+    val cPath = StoredIndex.compacted(spark, StoredIndex.Phrase, segPath)
     def seg(p: String) = spark.read.parquet(p)
     // the postings half unions on compact → plain row digests retire it
-    val postings = TextQueries.segmentRetirementPlan(
+    val postings = StoredIndex.segmentRetirementPlan(
         Seq("seg0" -> seg(s"$segPath/seg0/postings"),
           "seg1" -> seg(s"$segPath/seg1/postings")),
         seg(s"$cPath/postings"))
@@ -162,12 +162,12 @@ class Bm25RetirementSpec extends AnyFunSuite with BeforeAndAfterAll {
     val bigramSegs = Seq("seg0" -> seg(s"$segPath/seg0/bigrams"),
       "seg1" -> seg(s"$segPath/seg1/bigrams"))
     val comp = seg(s"$cPath/bigrams")
-    val rowMode = TextQueries.segmentRetirementPlan(bigramSegs, comp)
+    val rowMode = StoredIndex.segmentRetirementPlan(bigramSegs, comp)
       .select(col("retire")).collect().map(_.getLong(0)).toSeq
     assert(rowMode.forall(_ == 0L),
       "row digests must refuse an aggregated compaction (it is not a union)")
     // ...while the cnt-weighted digest is aggregation-invariant and retires
-    val weighted = TextQueries.segmentRetirementPlan(bigramSegs, comp, Some("cnt"))
+    val weighted = StoredIndex.segmentRetirementPlan(bigramSegs, comp, Some("cnt"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(4))).toSeq
     assert(weighted.forall(_._3 == 1L),
       s"weighted digests must retire the summed bigram table: $weighted")
@@ -178,7 +178,7 @@ class Bm25RetirementSpec extends AnyFunSuite with BeforeAndAfterAll {
     val first = comp.limit(1)
     val forged = comp.exceptAll(first)
       .unionByName(first.withColumn("cnt", col("cnt") + 1L))
-    val v2 = TextQueries.segmentRetirementPlan(bigramSegs, forged, Some("cnt"))
+    val v2 = StoredIndex.segmentRetirementPlan(bigramSegs, forged, Some("cnt"))
       .select(col("retire")).collect().map(_.getLong(0)).toSeq
     assert(v2.forall(_ == 0L), "a bumped count must block retirement")
   }

@@ -8,6 +8,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SimilarityQueries
+import graft.operators.StoredIndex
 
 /** Round-14 int8-IVF incremental append (q_c71) + drift monitor (q_c72).
   *
@@ -40,7 +41,7 @@ class Int8AppendSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("q_c71: base index + appended batch codes == rebuild under the frozen quantizer") {
-    val path = SimilarityQueries.int8BaseIndex(spark, sf)
+    val path = StoredIndex.segments(spark, StoredIndex.Ivf, sf)
     val (fn, nprobe, _) = SimilarityQueries.frozenQuantizer(spark, path)
     graft.functions.CosineSimilarity.register(spark)
     val e = graft.core.CachedRdds.registerDf(
@@ -59,7 +60,7 @@ class Int8AppendSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("frozen-quantizer rebind is deterministic and retrain-free") {
-    val path = SimilarityQueries.int8BaseIndex(spark, sf)
+    val path = StoredIndex.segments(spark, StoredIndex.Ivf, sf)
     val a = SimilarityQueries.frozenQuantizer(spark, path)
     val b = SimilarityQueries.frozenQuantizer(spark, path)
     // the registered name is a content hash of the centroid matrix: two
@@ -77,7 +78,7 @@ class Int8AppendSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("q_c72: a shifted batch trips the rebuild gate") {
-    val path = SimilarityQueries.int8BaseIndex(spark, sf)
+    val path = StoredIndex.segments(spark, StoredIndex.Ivf, sf)
     val (fn, _, k) = SimilarityQueries.frozenQuantizer(spark, path)
     // shift: collapse the batch onto 4 planted cluster directions — its
     // assignments concentrate on ~4 of the k cells
@@ -86,7 +87,7 @@ class Int8AppendSpec extends AnyFunSuite with BeforeAndAfterAll {
       SimilarityQueries.ivfCorpus(spark, sf).filter(col("vec_id") % 10 === 3),
       nClusters = 4)
       .select(expr(s"element_at($fn(v, 1), 1)").as("cell"))
-    val rows = SimilarityQueries.ivfDrift(spark, s"$path/codes", shifted, k).collect()
+    val rows = SimilarityQueries.ivfDrift(spark, s"$path/seg0/codes", shifted, k).collect()
     assert(rows.nonEmpty && rows.forall(_.getAs[Boolean]("rebuild")))
   }
 
@@ -95,7 +96,7 @@ class Int8AppendSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sp = spark
     implicit val sqlCtx = sp.sqlContext
     import sp.implicits._
-    val path = SimilarityQueries.int8BaseIndex(sp, sf)
+    val path = StoredIndex.segments(sp, StoredIndex.Ivf, sf)
     val (fn, _, _) = SimilarityQueries.frozenQuantizer(sp, path)
     graft.functions.CosineSimilarity.register(sp)
     graft.functions.Int8Ops.register(sp)

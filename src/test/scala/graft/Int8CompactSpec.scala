@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.SimilarityQueries
+import graft.operators.StoredIndex
 
 /** Round-16 int8-IVF segment compaction (q_c130) + artifact-only
   * symmetric stage-1 (q_c131) — the fourth verb for the fourth (last)
@@ -49,14 +49,14 @@ class Int8CompactSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("segments genuinely split; compacted codes == exact union") {
-    val segPath = SimilarityQueries.int8SegmentsIndex(spark, sf)
+    val segPath = StoredIndex.segments(spark, StoredIndex.Ivf, sf)
     val seg0 = spark.read.parquet(s"$segPath/seg0/codes")
       .select(col("vec_id")).collect().map(_.getLong(0))
     val seg1 = spark.read.parquet(s"$segPath/seg1/codes")
       .select(col("vec_id")).collect().map(_.getLong(0))
     assert(seg0.nonEmpty && seg0.forall(_ % 10 != 3))
     assert(seg1.nonEmpty && seg1.forall(_ % 10 == 3))
-    val path = SimilarityQueries.int8CompactedIndex(spark, segPath)
+    val path = StoredIndex.compacted(spark, StoredIndex.Ivf, segPath)
     // full code ROWS (id, cell, bytes) survive the merge exactly
     def rows(p: String): Seq[String] =
       spark.read.parquet(p)
@@ -78,9 +78,9 @@ class Int8CompactSpec extends AnyFunSuite with BeforeAndAfterAll {
     val tmp = Files.createTempDirectory("graft-ivf-compact-proof")
     val embCopy = tmp.resolve("embeddings.parquet")
     Files.copy(Paths.get(sf, "embeddings.parquet"), embCopy)
-    val segPath = SimilarityQueries.int8SegmentsIndex(spark, tmp.toString)
+    val segPath = StoredIndex.segments(spark, StoredIndex.Ivf, tmp.toString)
     Files.delete(embCopy)
-    val path = SimilarityQueries.int8CompactedIndex(spark, segPath)
+    val path = StoredIndex.compacted(spark, StoredIndex.Ivf, segPath)
     val merged = spark.read.parquet(s"$path/codes")
       .select(col("vec_id"), col("cell"), hex(col("q8")))
       .collect().map(_.toString).sorted.toSeq

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.StoredIndex
 
 /** q_c132 — the IVF nprobe frontier (q_c120's calibration verb for the
   * second approximate family): recall@5 against exact brute force and
@@ -70,8 +71,8 @@ class IvfFrontierSpec extends AnyFunSuite with BeforeAndAfterAll {
     import graft.operators.SimilarityQueries
     val out = rows()
     val np = out(out.size / 2)._1.toInt
-    val path = SimilarityQueries.int8CompactedIndex(
-      spark, SimilarityQueries.int8SegmentsIndex(spark, sf))
+    val path = StoredIndex.compacted(
+      spark, StoredIndex.Ivf, StoredIndex.segments(spark, StoredIndex.Ivf, sf))
     val (fn, _, _) = SimilarityQueries.frozenQuantizer(spark, path)
     graft.functions.CosineSimilarity.register(spark)
     val e = graft.core.CachedRdds.registerDf(

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.StoredIndex
 
 /** q_c103 positional phrase search.
   *
@@ -89,7 +90,7 @@ class PhraseSearchSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(appended.nonEmpty && appended == stored,
       "incremental positional maintenance must lose nothing vs a rebuild")
     // the base index genuinely excludes the batch docs
-    val basePath = graft.operators.TextQueries.phraseBaseIndex(spark, sf)
+    val basePath = s"${StoredIndex.segments(spark, StoredIndex.Phrase, sf)}/seg0"
     val baseDocs = spark.read.parquet(s"$basePath/postings")
       .select(col("doc_id")).distinct().collect().map(_.getLong(0))
     assert(baseDocs.nonEmpty && baseDocs.forall(_ % 10 != 3))
@@ -105,9 +106,9 @@ class PhraseSearchSpec extends AnyFunSuite with BeforeAndAfterAll {
       "phrase compaction must lose nothing vs a one-shot build")
     // the summed segment bigram tables equal the full build's table —
     // the additive-count property the merge relies on
-    val segPath = graft.operators.TextQueries.phraseSegmentsIndex(spark, sf)
-    val path = graft.operators.TextQueries.phraseCompactedIndex(spark, segPath)
-    val fullPath = graft.operators.TextQueries.phraseIndex(spark, sf)
+    val segPath = StoredIndex.segments(spark, StoredIndex.Phrase, sf)
+    val path = StoredIndex.compacted(spark, StoredIndex.Phrase, segPath)
+    val fullPath = StoredIndex.full(spark, StoredIndex.Phrase, sf)
     def bigrams(p: String) = spark.read.parquet(s"$p/bigrams")
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
     assert(bigrams(path) === bigrams(fullPath))
@@ -122,7 +123,7 @@ class PhraseSearchSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("term predicate pushes into the positional postings scan") {
-    val path = graft.operators.TextQueries.phraseIndex(spark, sf)
+    val path = StoredIndex.full(spark, StoredIndex.Phrase, sf)
     val plan = graft.operators.TextQueries.phraseSearchStored(spark, path)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters: [In(term")
@@ -131,7 +132,7 @@ class PhraseSearchSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("warm stored searches never scan the corpus — only the index") {
-    val path = graft.operators.TextQueries.phraseIndex(spark, sf)
+    val path = StoredIndex.full(spark, StoredIndex.Phrase, sf)
     for (df <- Seq(
         graft.operators.TextQueries.phraseSearchStored(spark, path),
         graft.operators.TextQueries.proximitySearchStored(spark, path))) {
@@ -174,7 +175,7 @@ class PhraseSearchSpec extends AnyFunSuite with BeforeAndAfterAll {
       qPost.processAllAvailable()
       qBg.processAllAvailable()
     }
-    val basePath = graft.operators.TextQueries.phraseBaseIndex(sp, sf)
+    val basePath = s"${StoredIndex.segments(sp, StoredIndex.Phrase, sf)}/seg0"
     val served = graft.streaming.StreamingOps
       .phraseAppendServe(sp, basePath, sp.table("phrasepost"), sp.table("phrasebg"))
       .collect().map(_.toString).toSeq
@@ -188,8 +189,8 @@ class PhraseSearchSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("index is built once per corpus snapshot, then reused") {
-    val p1 = graft.operators.TextQueries.phraseIndex(spark, sf)
-    val p2 = graft.operators.TextQueries.phraseIndex(spark, sf)
+    val p1 = StoredIndex.full(spark, StoredIndex.Phrase, sf)
+    val p2 = StoredIndex.full(spark, StoredIndex.Phrase, sf)
     assert(p1 == p2, "index rebuilt within an unchanged snapshot")
     // positional postings are complete per term: every corpus occurrence
     // of a term is present, so occurrence counts from the index equal a

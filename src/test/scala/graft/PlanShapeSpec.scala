@@ -62,16 +62,23 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(plan.contains("hyperplanesignature"), "signature projection missing entirely")
   }
 
-  private def executed(name: String): String = {
-    val df = SparkEntry.queries(name)(spark, dir)
+  private def executedPlan(df: org.apache.spark.sql.DataFrame): String = {
     df.write.format("noop").mode("overwrite").save() // settle AQE final plan
     val p = df.queryExecution.executedPlan.toString
     graft.core.CachedRdds.drain()
     p
   }
 
+  private def executed(name: String): String =
+    executedPlan(SparkEntry.queries(name)(spark, dir))
+
   test("q_c24 benchmark n-gram join is broadcast (corpus never shuffles on ng)") {
-    val plan = executed("q_c24_decontaminate")
+    // q_c24 serves the session-memoized report (a scan of its persisted
+    // rows), so the guard pins the plan that BUILDS the report, with the
+    // memo evicted so nothing cached can stand in for it
+    graft.core.SessionMemo.evict(Some(spark))
+    val plan = executedPlan(
+      graft.operators.PipelineQueries.decontamReportBuild(spark, dir))
     assert(plan.contains("BroadcastHashJoin"),
       s"benchmark set must broadcast:\n$plan")
     assert(!plan.contains("SortMergeJoin"),

@@ -65,9 +65,16 @@ class PolyHashSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("poly_hash ≡ the HOF char fold, edge + fuzz strings") {
     val s = spark
     import s.implicits._
-    val df = strings.toDF("s")
+    // malformed UTF-8 exists only as bytes: a stray continuation byte,
+    // invalid lead bytes, a lead byte followed by a non-continuation
+    // byte, and an overlong encoding. (A sequence truncated at the END of
+    // the string is left out: there `ascii` reads past the last split
+    // piece, so the HOF reference itself is undefined.)
+    val malformed = Seq("80", "61FF62", "C328", "C0AF7A", "E28228", "68C3A9C32874")
+      .toDF("h").select(expr("CAST(unhex(h) AS STRING)").as("s"))
+    val df = strings.toDF("s").unionByName(malformed)
       .select(col("s"), expr("poly_hash(s)").as("fast"), expr(hofHash).as("slow"))
-    val bad = df.filter(col("fast") =!= col("slow")).collect()
+    val bad = df.filter(not(col("fast") <=> col("slow"))).collect()
     assert(bad.isEmpty, s"poly_hash diverged on: ${bad.take(5).mkString(", ")}")
   }
 
@@ -102,7 +109,7 @@ class PolyHashSpec extends AnyFunSuite with BeforeAndAfterAll {
           "transform(sequence(0, size(ts) - 3), i -> " +
             "aggregate(split(concat_ws(' ', ts[i], ts[i+1], ts[i+2]), ''), 0L," +
             " (acc, ch) -> (acc * 31 + ascii(ch)) % 1000000007L))").as("slow"))
-    val bad = df.filter(col("fast") =!= col("slow")).collect()
+    val bad = df.filter(not(col("fast") <=> col("slow"))).collect()
     assert(bad.isEmpty, s"gram_hashes diverged on: ${bad.take(5).mkString(", ")}")
   }
 
@@ -123,9 +130,25 @@ class PolyHashSpec extends AnyFunSuite with BeforeAndAfterAll {
           when(size(col("hs")) >= w, expr(
             s"transform(sequence(0, size(hs) - $w), p -> array_min(slice(hs, p + 1, $w)))"))
             .otherwise(array(array_min(col("hs")))).as("slow"))
-      val bad = df.filter(col("fast") =!= col("slow")).collect()
+      val bad = df.filter(not(col("fast") <=> col("slow"))).collect()
       assert(bad.isEmpty, s"sliding_min(w=$w) diverged: ${bad.take(5).mkString(", ")}")
     }
+  }
+
+  test("sliding_min: empty input gives [], nullable-element input is rejected") {
+    val s = spark
+    import s.implicits._
+    // the HOF's otherwise-branch gives [NULL] here; the kernel declares
+    // NULL-free output, so an empty hash stream has no window minima
+    val empty = Seq(Seq.empty[Long]).toDF("hs")
+      .select(expr("sliding_min(hs, 4)")).collect()
+    assert(empty.head.getSeq[Long](0).isEmpty)
+    val nullable = Seq(Seq[java.lang.Long](1L, null)).toDF("hs")
+    assert(nullable.schema("hs").dataType ==
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, true))
+    val err = intercept[org.apache.spark.sql.AnalysisException](
+      nullable.select(expr("sliding_min(hs, 4)")).collect())
+    assert(err.getMessage.contains("containsNull"))
   }
 
   test("gram_hashes matches hashing the materialized shingle strings (min-invariance witness)") {

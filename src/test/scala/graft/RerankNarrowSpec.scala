@@ -5,6 +5,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SimilarityQueries
+import graft.operators.StoredIndex
 
 /** The narrow-rerank-window dispatch
   * (`spark.graft.rerank.narrowWindows`, default off locally, on in the
@@ -32,13 +33,13 @@ class RerankNarrowSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("narrow and fat window layouts return identical search rows") {
-    val path = SimilarityQueries.int8BaseIndex(spark, sf)
+    val path = StoredIndex.segments(spark, StoredIndex.Ivf, sf)
     val (fn, nprobe, _) = SimilarityQueries.frozenQuantizer(spark, path)
     graft.functions.CosineSimilarity.register(spark)
     val e = graft.core.CachedRdds.registerDf(
       SimilarityQueries.ivfCorpus(spark, sf)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val codes = spark.read.parquet(s"$path/codes")
+    val codes = spark.read.parquet(s"$path/seg0/codes")
     def run(): Seq[String] =
       SimilarityQueries.ivfSearchCodes(spark, codes, e, fn, nprobe)
         .collect().map(_.toString).toSeq

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.StoredIndex
 
 /** q_c134/q_c135/q_c136 — the retirement verdict REGISTERED for the
   * remaining three stored-index families (the q_c133 pattern; the law
@@ -58,15 +59,15 @@ class RetirementFamiliesSpec extends AnyFunSuite with BeforeAndAfterAll {
         r.getLong(3), r.getLong(4))).toSeq, "ivf")
     // tamper: flip one byte of one q8 code in the compacted table — the
     // hex canonicalization must carry the change into the digest
-    val segPath = graft.operators.SimilarityQueries.int8SegmentsIndex(spark, sf)
-    val cPath = graft.operators.SimilarityQueries.int8CompactedIndex(spark, segPath)
+    val segPath = StoredIndex.segments(spark, StoredIndex.Ivf, sf)
+    val cPath = StoredIndex.compacted(spark, StoredIndex.Ivf, segPath)
     val comp = spark.read.parquet(s"$cPath/codes")
     val minId = comp.agg(min(col("vec_id"))).head().getLong(0)
     val forged = comp.withColumn("q8",
       when(col("vec_id") === minId,
         expr("concat(unhex('FF'), substr(q8, 2, octet_length(q8) - 1))"))
         .otherwise(col("q8")))
-    val verdict = graft.operators.TextQueries.segmentRetirementPlan(
+    val verdict = StoredIndex.segmentRetirementPlan(
         Seq("seg0" -> spark.read.parquet(s"$segPath/seg0/codes"),
           "seg1" -> spark.read.parquet(s"$segPath/seg1/codes")),
         forged)
@@ -87,8 +88,8 @@ class RetirementFamiliesSpec extends AnyFunSuite with BeforeAndAfterAll {
     // weighted mode really is weight-conserving, not row-counting: the
     // bigram block's n_rows is the summed cnt, which must exceed the
     // distinct row count of the compacted table
-    val segPath = graft.operators.TextQueries.phraseSegmentsIndex(spark, sf)
-    val cPath = graft.operators.TextQueries.phraseCompactedIndex(spark, segPath)
+    val segPath = StoredIndex.segments(spark, StoredIndex.Phrase, sf)
+    val cPath = StoredIndex.compacted(spark, StoredIndex.Phrase, segPath)
     val nKeys = spark.read.parquet(s"$cPath/bigrams").count()
     val wRow = out.find(r => r._1 == "bigrams" && r._2 == "compacted").get
     assert(wRow._3 > nKeys, "bigram n_rows must report total weight, not key count")

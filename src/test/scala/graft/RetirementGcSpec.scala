@@ -8,6 +8,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.TextQueries
+import graft.operators.StoredIndex
 
 /** q_c141 — the retirement GC verb. q_c133 certifies that segments are
   * retire-able; this spec proves the ACTION: certified segments are
@@ -45,14 +46,14 @@ class RetirementGcSpec extends AnyFunSuite with BeforeAndAfterAll {
     Files.copy(Paths.get(sf, "documents.parquet"), docCopy)
     // the pre-GC answer: scored straight off the segment union (the
     // layout a reader would hit BEFORE compaction + GC)
-    val segPath = TextQueries.bm25SegmentsIndex(spark, tmp.toString)
+    val segPath = StoredIndex.segments(spark, StoredIndex.Bm25, tmp.toString)
     val pre = TextQueries.bm25Score(
       spark.read.parquet(s"$segPath/seg0/postings", s"$segPath/seg1/postings"),
       spark.read.parquet(s"$segPath/seg0/stats", s"$segPath/seg1/stats")
         .agg(sum(col("n_docs")).cast("double").as("n_docs"),
           sum(col("tot")).cast("double").as("tot")),
       terms).collect().map(_.toString).toSeq
-    val gcPath = TextQueries.bm25GcIndex(spark, tmp.toString)
+    val gcPath = StoredIndex.gc(spark, StoredIndex.Bm25, tmp.toString)
     Files.delete(docCopy)
     // the segments are GONE — the verb acted
     assert(!Files.exists(Paths.get(gcPath, "segments", "seg0")))
@@ -86,7 +87,7 @@ class RetirementGcSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the compaction LOST a row — not a faithful union
     (seg0 ++ seg1).tail.toDF("term", "doc_id", "tf", "dl")
       .write.parquet(s"$tmp/compacted/postings")
-    val log = TextQueries.retirementGc(spark,
+    val log = StoredIndex.retirementGc(spark,
       Seq("seg0" -> s"$tmp/seg0", "seg1" -> s"$tmp/seg1"),
       s"$tmp/compacted", Seq("postings" -> None))
     assert(log.exists(_._6 == 0L), "the verdict must catch the lost row")
@@ -111,7 +112,7 @@ class RetirementGcSpec extends AnyFunSuite with BeforeAndAfterAll {
     bg1.toDF("w1", "w2", "cnt").write.parquet(s"$tmp/seg1/bigrams")
     Seq(("a", "b", 4L)).toDF("w1", "w2", "cnt")    // 3 + 2 summed WRONG
       .write.parquet(s"$tmp/compacted/bigrams")
-    val log = TextQueries.retirementGc(spark,
+    val log = StoredIndex.retirementGc(spark,
       Seq("seg0" -> s"$tmp/seg0", "seg1" -> s"$tmp/seg1"),
       s"$tmp/compacted",
       Seq("postings" -> None, "bigrams" -> Some("cnt")))
@@ -132,11 +133,11 @@ class RetirementGcSpec extends AnyFunSuite with BeforeAndAfterAll {
     locally {
       val tmp = Files.createTempDirectory("graft-gc-mh")
       Files.copy(Paths.get(sf, "documents.parquet"), tmp.resolve("documents.parquet"))
-      val segPath = DedupQueries.minhashSegmentsIndex(spark, tmp.toString)
+      val segPath = StoredIndex.segments(spark, StoredIndex.MinHash, tmp.toString)
       val pre = DedupQueries.candidatesFromSigs(
         spark.read.parquet(s"$segPath/seg0/sigs", s"$segPath/seg1/sigs"))
         .collect().map(_.toString).sorted.toSeq
-      val gc = DedupQueries.minhashGcIndex(spark, tmp.toString)
+      val gc = StoredIndex.gc(spark, StoredIndex.MinHash, tmp.toString)
       Files.delete(tmp.resolve("documents.parquet"))
       assert(!Files.exists(Paths.get(gc, "segments", "seg0")))
       assert(!Files.exists(Paths.get(gc, "segments", "seg1")))
@@ -149,13 +150,13 @@ class RetirementGcSpec extends AnyFunSuite with BeforeAndAfterAll {
     locally {
       val tmp = Files.createTempDirectory("graft-gc-ivf")
       Files.copy(Paths.get(sf, "embeddings.parquet"), tmp.resolve("embeddings.parquet"))
-      val segPath = SimilarityQueries.int8SegmentsIndex(spark, tmp.toString)
+      val segPath = StoredIndex.segments(spark, StoredIndex.Ivf, tmp.toString)
       val pre = SimilarityQueries.ivfStage1SymFrames(spark,
         spark.read.parquet(s"$segPath/model").head().getInt(1),
         spark.read.parquet(s"$segPath/seg0/codes", s"$segPath/seg1/codes"),
         spark.read.parquet(s"$segPath/cents"))
         .collect().map(_.toString).toSeq
-      val gc = SimilarityQueries.int8GcIndex(spark, tmp.toString)
+      val gc = StoredIndex.gc(spark, StoredIndex.Ivf, tmp.toString)
       Files.delete(tmp.resolve("embeddings.parquet"))
       assert(!Files.exists(Paths.get(gc, "segments", "seg0")))
       assert(!Files.exists(Paths.get(gc, "segments", "seg1")))
@@ -168,14 +169,14 @@ class RetirementGcSpec extends AnyFunSuite with BeforeAndAfterAll {
     locally {
       val tmp = Files.createTempDirectory("graft-gc-ph")
       Files.copy(Paths.get(sf, "documents.parquet"), tmp.resolve("documents.parquet"))
-      val segPath = TextQueries.phraseSegmentsIndex(spark, tmp.toString)
+      val segPath = StoredIndex.segments(spark, StoredIndex.Phrase, tmp.toString)
       val pre = TextQueries.phraseReport(spark,
         spark.read.parquet(s"$segPath/seg0/postings", s"$segPath/seg1/postings"),
         spark.read.parquet(s"$segPath/seg0/bigrams", s"$segPath/seg1/bigrams")
           .groupBy(col("w1"), col("w2"))
           .agg(sum(col("cnt")).cast("long").as("cnt")))
         .collect().map(_.toString).toSeq
-      val gc = TextQueries.phraseGcIndex(spark, tmp.toString)
+      val gc = StoredIndex.gc(spark, StoredIndex.Phrase, tmp.toString)
       Files.delete(tmp.resolve("documents.parquet"))
       assert(!Files.exists(Paths.get(gc, "segments", "seg0")))
       assert(!Files.exists(Paths.get(gc, "segments", "seg1")))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.TextQueries
+import graft.operators.StoredIndex
 
 /** Property coverage for the retirement-digest laws on RANDOM multisets
   * (seeded — the GeometrySpec style): for arbitrary row multisets split
@@ -47,7 +47,7 @@ class RetirementPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
   private def verdict(segs: Seq[Seq[(String, Long, Long)]],
                       comp: Seq[(String, Long, Long)],
                       weighted: Boolean): Long =
-    TextQueries.segmentRetirementPlan(
+    StoredIndex.segmentRetirementPlan(
         segs.zipWithIndex.map { case (s0, i) => (s"seg$i", df(s0)) },
         df(comp), if (weighted) Some("w") else None)
       .select(col("retire")).head().getLong(0)
@@ -89,11 +89,11 @@ class RetirementPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
     import sp.implicits._
     def two(rows: Seq[(String, String)]) = rows.toDF("s1", "s2")
     val seg = Seq("seg0" -> two(Seq(("a|b", "c"))))
-    assert(TextQueries.segmentRetirementPlan(seg, two(Seq(("a", "b|c"))))
+    assert(StoredIndex.segmentRetirementPlan(seg, two(Seq(("a", "b|c"))))
       .select(col("retire")).head().getLong(0) == 0L,
       "separator-shifted rows must break the digest")
     // and the honest case still retires
-    assert(TextQueries.segmentRetirementPlan(seg, two(Seq(("a|b", "c"))))
+    assert(StoredIndex.segmentRetirementPlan(seg, two(Seq(("a|b", "c"))))
       .select(col("retire")).head().getLong(0) == 1L)
   }
 }

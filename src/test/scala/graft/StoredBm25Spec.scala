@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.StoredIndex
 
 /** q_c45 stored-postings BM25: the stored search must be row-identical to
   * the derived q_c12 plan, the postings scan must push the term predicate
@@ -46,7 +47,7 @@ class StoredBm25Spec extends AnyFunSuite with BeforeAndAfterAll {
       "incremental postings maintenance must lose nothing vs a rebuild")
     // the base index genuinely excludes the batch, and its stats are the
     // base corpus's — the append path cannot be serving a full index
-    val basePath = graft.operators.TextQueries.postingsBaseIndex(spark, sf)
+    val basePath = s"${StoredIndex.segments(spark, StoredIndex.Bm25, sf)}/seg0"
     val baseDocs = spark.read.parquet(s"$basePath/postings")
       .select(col("doc_id")).distinct().collect().map(_.getLong(0))
     assert(baseDocs.nonEmpty && baseDocs.forall(_ % 10 != 3))
@@ -56,7 +57,7 @@ class StoredBm25Spec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("term predicate pushes into the postings parquet scan") {
-    val path = graft.operators.TextQueries.postingsIndex(spark, sf)
+    val path = StoredIndex.full(spark, StoredIndex.Bm25, sf)
     val plan = graft.operators.TextQueries
       .bm25SearchStored(spark, path, Seq("hash", "join", "filter"))
       .queryExecution.executedPlan.toString
@@ -73,8 +74,8 @@ class StoredBm25Spec extends AnyFunSuite with BeforeAndAfterAll {
       "compaction must lose nothing vs a one-shot build")
     // the compacted artifact is ONE postings table (the read-side point
     // of compacting) and keeps the q_c45 pushdown property
-    val segPath = graft.operators.TextQueries.bm25SegmentsIndex(spark, sf)
-    val path = graft.operators.TextQueries.bm25CompactedIndex(spark, segPath)
+    val segPath = StoredIndex.segments(spark, StoredIndex.Bm25, sf)
+    val path = StoredIndex.compacted(spark, StoredIndex.Bm25, segPath)
     val plan = graft.operators.TextQueries
       .bm25SearchStored(spark, path, Seq("hash", "join", "filter"))
       .queryExecution.executedPlan.toString
@@ -99,10 +100,10 @@ class StoredBm25Spec extends AnyFunSuite with BeforeAndAfterAll {
     val docsCopy = tmp.resolve("documents.parquet")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(sf, "documents.parquet"), docsCopy)
-    val segPath = graft.operators.TextQueries.bm25SegmentsIndex(spark, tmp.toString)
+    val segPath = StoredIndex.segments(spark, StoredIndex.Bm25, tmp.toString)
     java.nio.file.Files.delete(docsCopy)
     val compacted = graft.operators.TextQueries.bm25SearchStored(
-      spark, graft.operators.TextQueries.bm25CompactedIndex(spark, segPath),
+      spark, StoredIndex.compacted(spark, StoredIndex.Bm25, segPath),
       Seq("hash", "join", "filter")).collect().map(_.toString).toSeq
     val stored = SparkEntry.queries("q_c45_bm25_stored")(spark, sf)
       .collect().map(_.toString).toSeq
@@ -112,8 +113,8 @@ class StoredBm25Spec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("index is built once per corpus snapshot, then reused") {
-    val p1 = graft.operators.TextQueries.postingsIndex(spark, sf)
-    val p2 = graft.operators.TextQueries.postingsIndex(spark, sf)
+    val p1 = StoredIndex.full(spark, StoredIndex.Bm25, sf)
+    val p2 = StoredIndex.full(spark, StoredIndex.Bm25, sf)
     assert(p1 == p2, "index rebuilt within an unchanged snapshot")
     // the postings table carries complete per-term postings: df computed
     // from a term's fetched rows equals the corpus document frequency

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.StoredIndex
 
 /** q_c66 — the stored MinHash signature index (the q_c45/int8
   * index-lifecycle class): stored-search candidates are bit-identical to
@@ -37,10 +38,10 @@ class StoredMinhashSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(stored.nonEmpty, "fixture must produce candidate pairs")
     assert(stored === derived)
     // signatures round-trip exactly through parquet
-    val path = DedupQueries.minhashIndex(spark, sf)
+    val path = StoredIndex.full(spark, StoredIndex.MinHash, sf)
     val sigStored = spark.read.parquet(s"$path/sigs")
       .collect().map(_.toString).sorted.toSeq
-    val sigDerived = DedupQueries.minhashSignatures(spark, sf)
+    val sigDerived = DedupQueries.minhashSignatures(graft.core.Tables(spark, sf, "documents"))
       .collect().map(_.toString).sorted.toSeq
     assert(sigStored === sigDerived)
   }
@@ -56,7 +57,8 @@ class StoredMinhashSpec extends AnyFunSuite with BeforeAndAfterAll {
       "incremental maintenance must lose nothing vs a rebuild")
     // the stored base index genuinely excludes the batch — the append
     // path cannot be serving a secretly-full index
-    val baseIds = spark.read.parquet(s"${DedupQueries.minhashBaseIndex(spark, sf)}/sigs")
+    val baseIds = spark.read
+      .parquet(s"${StoredIndex.segments(spark, StoredIndex.MinHash, sf)}/seg0/sigs")
       .select(col("doc_id")).collect().map(_.getLong(0))
     assert(baseIds.nonEmpty && baseIds.forall(_ % 10 != 3))
   }
@@ -70,7 +72,7 @@ class StoredMinhashSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(compacted.nonEmpty && compacted == stored,
       "signature compaction must lose nothing vs the one-shot index")
     // the segments are a real partition of the corpus by the batch rule
-    val segPath = graft.operators.DedupQueries.minhashSegmentsIndex(spark, sf)
+    val segPath = StoredIndex.segments(spark, StoredIndex.MinHash, sf)
     val seg0 = spark.read.parquet(s"$segPath/seg0/sigs")
       .select(col("doc_id")).collect().map(_.getLong(0))
     val seg1 = spark.read.parquet(s"$segPath/seg1/sigs")
@@ -78,7 +80,7 @@ class StoredMinhashSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(seg0.nonEmpty && seg0.forall(_ % 10 != 3))
     assert(seg1.nonEmpty && seg1.forall(_ % 10 == 3))
     // the compacted table is the exact union, one row per doc
-    val path = graft.operators.DedupQueries.minhashCompactedIndex(spark, segPath)
+    val path = StoredIndex.compacted(spark, StoredIndex.MinHash, segPath)
     val merged = spark.read.parquet(s"$path/sigs")
       .select(col("doc_id")).collect().map(_.getLong(0))
     assert(merged.sorted.toSeq == (seg0 ++ seg1).sorted.toSeq)
@@ -86,8 +88,8 @@ class StoredMinhashSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("a warm session reuses the index; the signature table is small") {
     import graft.operators.DedupQueries
-    val p1 = DedupQueries.minhashIndex(spark, sf)
-    val p2 = DedupQueries.minhashIndex(spark, sf)
+    val p1 = StoredIndex.full(spark, StoredIndex.MinHash, sf)
+    val p2 = StoredIndex.full(spark, StoredIndex.MinHash, sf)
     assert(p1 === p2, "unchanged corpus snapshot must serve the same index")
     val sigBytes = java.nio.file.Files.walk(java.nio.file.Paths.get(p1, "sigs"))
       .filter(f => f.toString.endsWith(".parquet"))
